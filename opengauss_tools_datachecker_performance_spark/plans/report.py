@@ -65,22 +65,17 @@ def summarize_dir(
     out_dir: str,
     schema_ok: bool = True,
     schema_message: str = "",
-    coverage: dict | None = None,
     baseline_dir: str | None = None,
-    decontamination: dict | None = None,
-    substring_dedup: dict | None = None,
-    near_dup_clusters: dict | None = None,
-    corpus_stats: dict | None = None,
-    interleaved_audit: dict | None = None,
-    snapshot_delta: dict | None = None,
-    table_audit: dict | None = None,
+    sections: dict | None = None,
 ) -> dict:
     """Build summary.json + success/failed logs from the written
     frames (covers every chunk written so far, including those from a
-    previous killed run). ``coverage``: plain counts of anything an
-    operator DROPPED under a cap (mega-LSH-buckets, stop-shingles —
-    operators.dedup.coverage_counts); they land in the summary so a
-    bounded-coverage run is never silently read as exhaustive.
+    previous killed run). ``sections``: summary entries of the optional
+    report stages (plans/sections.py), each a plain dict landing under
+    its own key; empty entries are left out. ``coverage_bounds`` is one
+    of them: plain counts of anything an operator DROPPED under a cap
+    (mega-LSH-buckets, stop-shingles — operators.dedup.coverage_counts),
+    so a bounded-coverage run is never silently read as exhaustive.
     ``baseline_dir``: a previous run's report dir — this run's
     violations are diffed against it (:func:`run_regression`),
     ``regression.parquet`` lands next to the frames, and the summary
@@ -134,22 +129,9 @@ def summarize_dir(
         "constraints": by_constraint,
         "display_keys": display_keys,
     }
-    if coverage:
-        summary["coverage_bounds"] = dict(coverage)
-    if decontamination:
-        summary["decontamination"] = dict(decontamination)
-    if substring_dedup:
-        summary["substring_dedup"] = dict(substring_dedup)
-    if near_dup_clusters:
-        summary["near_dup_clusters"] = dict(near_dup_clusters)
-    if corpus_stats:
-        summary["corpus_stats"] = dict(corpus_stats)
-    if interleaved_audit:
-        summary["interleaved_audit"] = dict(interleaved_audit)
-    if snapshot_delta:
-        summary["snapshot_delta"] = dict(snapshot_delta)
-    if table_audit:
-        summary["table_audit"] = dict(table_audit)
+    summary.update(
+        (name, dict(entry)) for name, entry in (sections or {}).items() if entry
+    )
     if baseline_dir is not None:
         prev, _ = _read_frames(spark, baseline_dir)
         reg = run_regression(violations, prev).persist()

@@ -38,10 +38,7 @@ from opengauss_tools_datachecker_performance_spark.checks.span_rules import (
 from opengauss_tools_datachecker_performance_spark.checks.uniqueness import (
     duplicate_keys_from_digests,
 )
-from opengauss_tools_datachecker_performance_spark.digest import (
-    bucket_of,
-    bucket_signatures,
-)
+from opengauss_tools_datachecker_performance_spark.digest import bucket_of
 from opengauss_tools_datachecker_performance_spark.functions.hashing import k_hash
 from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
@@ -182,11 +179,8 @@ def validate_docs(
     partition_col: str = "part",
     only_partitions: list[int] | None = None,
     drift_threshold: float = 0.15,
-    two_phase: bool = True,
-    eager: bool = True,
     max_violations_per_partition: int | None = None,
     skip_drift: bool = False,
-    driver_exchange: bool = False,
 ) -> ValidationResult:
     """Run every applicable check; returns violations + verdict grid.
 
@@ -195,11 +189,6 @@ def validate_docs(
     see plans.lineage for the anti-join that computes the list.
     """
     spark = docs_source.sparkSession
-    if driver_exchange and not eager:
-        # the exchange path is built around eagerly-materialized digest
-        # caches; silently falling back to the in-plan diff would make
-        # an A/B of the two strategies measure the same code twice
-        raise ValueError("driver_exchange=True requires eager=True")
 
     docs_source = docs_source.withColumnRenamed(partition_col, "part")
     if docs_sink is not None:
@@ -283,78 +272,33 @@ def validate_docs(
     dig_sink = (
         _enriched_digests(docs_sink).persist() if docs_sink is not None else None
     )
-    # two-phase pruning state decided at the barrier (eager path):
-    #   no_diff=True          → every bucket signature matched, skip the
-    #                           row-level join entirely
-    #   bucket_prune=[...]    → mismatched bucket ids, pushed into the
-    #                           cached digest scans as a literal filter
-    #   both None/False       → lazy path: diff_digests does its own
-    #                           in-plan signature agg + broadcast
-    no_diff = False
-    bucket_prune: list[int] | None = None
-    if eager:
-        # Materialize the digest caches as an explicit barrier before any
-        # downstream branch is planned against them. Without this, the
-        # first consumer to run is a driver-side BROADCAST BUILD (the
-        # mismatched-bucket set), so the heaviest stage of the whole job
-        # — the full doc scan + digest — executes inside a blocking
-        # broadcast future while the main job's stages sit idle.
-        #
-        # Optional driver_exchange path (DEFAULT OFF — measured worse):
-        # make the barrier action the digest-tree leaf aggregation
-        # itself — collect the ≤2^16 (bucket, sig, n_rows) rows per
-        # side and compare them in the driver, like the reference's
-        # endpoints exchanging Merkle roots (DataCheckRunnable.java:
-        # 359-375). Interleaved A/B at 3M docs (scripts/
-        # ab_driver_exchange.py): 46.1 s vs 28.4 s min — the literal
-        # IN filter of ~10^4 mismatched bucket ids bloats the logical
-        # plan that every downstream action re-analyzes, and the
-        # barrier becomes two sequential shuffle+collect jobs instead
-        # of cheap counts. The in-plan formulation (union+agg +
-        # broadcast semi-join, operators/diff.py) keeps the signature
-        # compare distributed and the plans small — the right call on
-        # a real cluster for the same reasons.
-        if dig_sink is not None and two_phase and driver_exchange:
-            src_sigs = {
-                r["bucket"]: (r["sig"], r["n_rows"])
-                for r in bucket_signatures(dig_src).collect()
-            }
-            sink_sigs = {
-                r["bucket"]: (r["sig"], r["n_rows"])
-                for r in bucket_signatures(dig_sink).collect()
-            }
-            seen = set(src_sigs) | set(sink_sigs)
-            bad = sorted(b for b in seen if src_sigs.get(b) != sink_sigs.get(b))
-            if not bad:
-                no_diff = True
-            elif len(bad) <= max(1, len(seen) // 2):
-                bucket_prune = bad
-            else:
-                # most buckets dirty — pruning can't pay; the
-                # signatures are ALREADY known dirty-majority, so the
-                # fall-through must not re-run the in-plan two-phase
-                # signature agg it just superseded
-                two_phase = False
-            # to the plain full-outer join over the whole caches
-        elif dig_sink is not None:
-            # materialize both sides' caches as CONCURRENT jobs (Spark
-            # schedulers fill one job's straggler/stage-gap slack with
-            # the other's tasks; on a real cluster this overlaps two
-            # independent table scans). A per-barrier AQE exemption
-            # (session-conf toggle around these counts) was built and
-            # interleaved-A/B-measured: WORSE (min 33.9 s vs 30.5 s at
-            # local[8] AQE-on, 3M docs) — caches built under a
-            # different AQE setting than their consumers cost more
-            # than AQE's stage decomposition does, so the barrier
-            # inherits the session setting untouched.
-            from concurrent.futures import ThreadPoolExecutor
+    # Materialize the digest caches as an explicit barrier before any
+    # downstream branch is planned against them. Without this, the
+    # first consumer to run is a driver-side BROADCAST BUILD (the
+    # mismatched-bucket set), so the heaviest stage of the whole job
+    # — the full doc scan + digest — executes inside a blocking
+    # broadcast future while the main job's stages sit idle. (A
+    # driver-side exchange of the bucket signatures as this barrier
+    # was measured worse; README "Performance notes" has the A/B.)
+    if dig_sink is not None:
+        # materialize both sides' caches as CONCURRENT jobs (Spark
+        # schedulers fill one job's straggler/stage-gap slack with
+        # the other's tasks; on a real cluster this overlaps two
+        # independent table scans). A per-barrier AQE exemption
+        # (session-conf toggle around these counts) was built and
+        # interleaved-A/B-measured: WORSE (min 33.9 s vs 30.5 s at
+        # local[8] AQE-on, 3M docs) — caches built under a
+        # different AQE setting than their consumers cost more
+        # than AQE's stage decomposition does, so the barrier
+        # inherits the session setting untouched.
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fs = [pool.submit(dig_src.count), pool.submit(dig_sink.count)]
-                for f in fs:
-                    f.result()
-        else:
-            dig_src.count()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fs = [pool.submit(dig_src.count), pool.submit(dig_sink.count)]
+            for f in fs:
+                f.result()
+    else:
+        dig_src.count()
 
     parts_all = dig_src.select("part").distinct()
     if dig_sink is not None:
@@ -370,34 +314,10 @@ def validate_docs(
         # frames; it feeds BOTH the violation rows and the updated-key
         # IN-list below — without persist that consumer would re-execute
         # the whole join subtree.
-        if no_diff:
-            # all 2^16 leaf signatures matched at the barrier — span-
-            # sequence equality holds everywhere, no row-level join
-            diffs = dig_src.select(
-                "key",
-                F.lit(None).cast("string").alias("diff_type"),
-                "part",
-                F.lit(None).cast("int").alias("span_idx"),
-            ).limit(0)
-        elif bucket_prune is not None:
-            from opengauss_tools_datachecker_performance_spark.operators.diff import (
-                classify_diff,
-            )
-
-            s = dig_src.filter(F.col("bucket").isin(bucket_prune))
-            t = dig_sink.filter(F.col("bucket").isin(bucket_prune))
-            diffs = classify_diff(s, t, carry_cols=["part"], locate_spans=True)
-        else:
-            diffs = diff_digests(
-                dig_src,
-                dig_sink,
-                two_phase=two_phase,
-                carry_cols=["part"],
-                locate_spans=True,
-            )
-        diffs = diffs.persist()
-        if eager:
-            diffs.count()
+        diffs = diff_digests(
+            dig_src, dig_sink, carry_cols=["part"], locate_spans=True
+        ).persist()
+        diffs.count()
         # --- span location for updated keys rides the diff join
         # itself (classify_diff(locate_spans=True)): the digest frames
         # carry per-span hash arrays, so the first divergent index is

@@ -3,6 +3,8 @@
 import json
 import os
 
+import pytest
+
 from opengauss_tools_datachecker_performance_spark.__main__ import main
 from opengauss_tools_datachecker_performance_spark.synth import write_corpus
 
@@ -379,6 +381,20 @@ def test_cli_corpus_stats_section(spark, tmp_path):
     # kept set = exactly the best-ranked prefix
     worst_kept = plan.filter("kept").agg({"rank": "max"}).collect()[0][0]
     assert plan.filter(f"NOT kept AND rank <= {worst_kept}").count() == 0
+    # a later run WITHOUT the flags must clear the stale frames
+    main(
+        ["--source", f"{corpus}/docs_source.parquet", "--report-dir", report],
+        spark=spark,
+    )
+    for frame in (
+        "vocab_stats.parquet",
+        "lm_surprisal.parquet",
+        "budget_prune.parquet",
+    ):
+        assert not os.path.isdir(os.path.join(report, frame)), frame
+    assert "corpus_stats" not in json.load(
+        open(os.path.join(report, "summary.json"))
+    )
 
 
 def test_cli_interleaved_audit_and_snapshot_delta(spark, tmp_path):
@@ -435,6 +451,7 @@ def test_cli_interleaved_audit_and_snapshot_delta(spark, tmp_path):
     )
     assert rc2 in (0, 1)
     assert not os.path.isdir(os.path.join(report, "media_context_audit.parquet"))
+    assert not os.path.isdir(os.path.join(report, "span_transitions.parquet"))
     assert not os.path.isdir(os.path.join(report, "snapshot_delta.parquet"))
     assert not os.path.isdir(os.path.join(report, "snapshot_drift.parquet"))
     summary2 = json.load(open(os.path.join(report, "summary.json")))
@@ -493,6 +510,15 @@ def test_cli_table_audit(spark, tmp_path):
         "audit_fd_discovery",
     ):
         assert os.path.exists(os.path.join(report, f"{frame}.parquet")), frame
+    # a later run WITHOUT the flags must clear every stale audit_* frame
+    main(
+        ["--source", f"{corpus}/docs_source.parquet", "--report-dir", report],
+        spark=spark,
+    )
+    assert not [f for f in os.listdir(report) if f.startswith("audit_")]
+    assert "table_audit" not in json.load(
+        open(os.path.join(report, "summary.json"))
+    )
 
 
 def test_cli_table_audit_wave19(spark, tmp_path):
@@ -530,3 +556,57 @@ def test_cli_table_audit_wave19(spark, tmp_path):
     eq = spark.read.parquet(os.path.join(report, "audit_equidepth.parquet"))
     counts = [r["n"] for r in eq.collect()]
     assert sum(counts) == 400 and max(counts) - min(counts) <= 1
+
+
+def test_cli_resume_nothing_pending_runs_near_dup(spark, tmp_path):
+    """A resumed run with nothing left to validate still runs every
+    requested optional stage — near-dup included — and refreshes the
+    summary with its coverage counts."""
+    corpus = _setup(spark, tmp_path)
+    docs_tbl = str(tmp_path / "nd_docs.parquet")
+    shared = "alpha beta gamma delta epsilon zeta eta theta " * 4
+    spark.createDataFrame(
+        [("a1", shared), ("a2", shared), ("u1", "q1 q2 q3 q4 q5 q6 q7 q8")],
+        "doc_id string, text string",
+    ).write.parquet(docs_tbl)
+    report = str(tmp_path / "report")
+    args = [
+        "--source", f"{corpus}/docs_source.parquet",
+        "--sink", f"{corpus}/docs_sink.parquet",
+        "--report-dir", report,
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+    ]
+    main(args, spark=spark)
+    rc = main(args + ["--resume", "--near-dup-table", docs_tbl], spark=spark)
+    assert rc == 0
+    pairs = spark.read.parquet(os.path.join(report, "near_dup_pairs.parquet"))
+    assert pairs.count() == 1
+    assert "coverage_bounds" in json.load(
+        open(os.path.join(report, "summary.json"))
+    )
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        ["--audit-fd", "cust"],  # no '='
+        ["--audit-domain", "status=O|F"],  # no --audit-key
+        ["--audit-complete", "a:x"],  # non-numeric MIN
+        ["--audit-json", "props"],  # no FIELD
+        ["--audit-histogram", "c:x"],  # non-numeric BINS
+        ["--audit-outliers", "ok"],  # no COL
+        ["--audit-rate", "ts"],  # no GROUP
+        ["--audit-split", "ck:g:--5"],  # repeated sign in SEED
+    ],
+)
+def test_cli_malformed_audit_spec_is_argparse_error(spec):
+    with pytest.raises(SystemExit) as exc:
+        main(
+            [
+                "--source", "s.parquet",
+                "--report-dir", "out",
+                "--audit-table", "t.parquet",
+                *spec,
+            ]
+        )
+    assert exc.value.code == 2

@@ -175,12 +175,3 @@ def test_missing_partition_column_fails_schema_gate(corpus):
     assert not res.schema_ok
     assert "no_such_col" in res.schema_message
 
-
-def test_driver_exchange_requires_eager(corpus):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="eager"):
-        validate_docs(
-            corpus["docs_source"], corpus["docs_sink"], corpus["assets"],
-            eager=False, driver_exchange=True,
-        )

@@ -110,6 +110,12 @@ def test_cli_source_overlap(spark, tmp_path):
     got = spark.read.parquet(os.path.join(report, "source_overlap.parquet"))
     r = got.collect()[0]
     assert (r["source_a"], r["source_b"], r["n_shared"]) == ("A", "B", 1)
+    # a later run WITHOUT the flag must clear the stale frame
+    main(
+        ["--source", f"{corpus}/docs_source.parquet", "--report-dir", report],
+        spark=spark,
+    )
+    assert not os.path.isdir(os.path.join(report, "source_overlap.parquet"))
 
 
 def test_cli_source_overlap_malformed_spec_is_argparse_error():

@@ -495,6 +495,51 @@ def test_status_demo_full_orchestration_cycle(corpus, spark, tmp_path):
     assert verdicts[0]["verdict"] == "failed" and rc == 1
 
 
+def test_status_demo_resume_advances_new_slices(corpus, spark, tmp_path):
+    """A --status-demo run resumed from its checkpoint must still see
+    its own CHECKED reports: a slice that turns READY after the restart
+    reaches DONE(7), not READY(3)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opengauss_tools_datachecker_performance_spark.__main__ import main
+
+    src_path = str(tmp_path / "src.parquet")
+    sink_path = str(tmp_path / "sink.parquet")
+    corpus["docs_source"].write.mode("overwrite").parquet(src_path)
+    corpus["docs_sink"].write.mode("overwrite").parquet(sink_path)
+    feed = tmp_path / "status"
+    feed.mkdir()
+
+    def drop(name, rows):
+        pq.write_table(
+            pa.table(
+                {
+                    "slice_no": pa.array([r[0] for r in rows], type=pa.int32()),
+                    "st": pa.array([r[1] for r in rows], type=pa.int32()),
+                }
+            ),
+            str(feed / name),
+        )
+
+    out_dir = tmp_path / "out"
+    argv = [
+        "--source", src_path,
+        "--sink", sink_path,
+        "--report-dir", str(out_dir),
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+        "--status-demo", str(feed),
+    ]
+    drop("e0.parquet", [(0, 1), (1, 1)])
+    drop("e1.parquet", [(0, 2)])
+    main(argv, spark=spark)
+    drop("e2.parquet", [(1, 2)])  # slice 1's sink extract, after restart
+    main(argv, spark=spark)
+    summary = json.load(open(out_dir / "status_demo.json"))
+    assert summary["slice_status"]["1"] == 7
+
 def test_status_demo_requires_sink_and_checkpoint():
     import pytest as _pytest
 

@@ -199,7 +199,7 @@ def test_dedup_coverage_accounting_and_release(spark, tmp_path):
         [(0, "consistency", 0, "pass")],
         "part int, constraint string, n_violations long, status string",
     ).write.parquet(os.path.join(rd, "verdicts.parquet"))
-    s = summarize_dir(spark, rd, coverage=counts)
+    s = summarize_dir(spark, rd, sections={"coverage_bounds": counts})
     assert s["coverage_bounds"]["minhash_dropped_bucket_entries"] == 48
     assert (
         json.load(open(os.path.join(rd, "summary.json")))["coverage_bounds"]
