@@ -956,7 +956,10 @@ def source_overlap_matrix(
     bounded per-source size frame joins through
     :func:`operators.skew.small_side` (this module pins no
     broadcasts — plan-audit gate).  Output is at most one row per
-    co-occurring source pair."""
+    co-occurring source pair.  Without ``coverage_out`` the matrix is
+    computed eagerly, so the cached (source, fp) frame is released
+    before return; with it, the frame is handed to the caller in
+    ``coverage_out['persisted']``."""
     fps = (
         df.select(
             F.col(source_col).cast("string").alias("source"),
@@ -997,7 +1000,7 @@ def source_overlap_matrix(
     sb = small_side(sizes.withColumnsRenamed({"source": "source_b", "n": "n_b"}))
     ratio = lambda c: F.round(c, 6).cast("decimal(10,6)").cast("string")  # noqa: E731
     union_n = F.col("n_a") + F.col("n_b") - F.col("n_shared")
-    return (
+    out = (
         shared.join(sa, "source_a")
         .join(sb, "source_b")
         .select(
@@ -1011,3 +1014,10 @@ def source_overlap_matrix(
             ratio(F.col("n_shared") / F.col("n_b")).alias("frac_b_in_a"),
         )
     )
+    if coverage_out is not None:
+        return out
+    # no ledger to release ``kept`` through: materialize the matrix (one
+    # row per co-occurring source pair) and release it here
+    matrix = out.toArrow()
+    kept.unpersist()
+    return df.sparkSession.createDataFrame(matrix)

@@ -18,7 +18,7 @@ order-insensitive fold of the batch's doc ids), and every update
 OVERWRITES its own batch= subdirs. The two writes are not atomic, but
 a crash between them is self-healing: the replay recomputes the same
 key from the same batch and rewrites both subdirs — the same
-dynamic-partition-overwrite discipline as update_digest_companion.
+per-partition overwrite discipline as update_digest_companion.
 
 Incremental detection then computes signatures for the new batch only,
 joins its band keys against the stored buckets (plus a new-vs-new

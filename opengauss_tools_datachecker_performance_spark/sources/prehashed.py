@@ -35,9 +35,9 @@ argument, compounded: no body scan AND no shuffle).
 
 from __future__ import annotations
 
-import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -95,8 +95,9 @@ def update_digest_companion(
     """Incrementally maintain a ``partitionBy(part)`` companion: merge
     re-digested rows for changed docs (``upserts``: raw docs shape)
     and remove ``delete_keys`` (a ``key`` column), rewriting ONLY the
-    affected partitions (dynamic partition overwrite). Returns the
-    list of rewritten partition values.
+    affected partitions (each is swapped for a one-file rewrite, see
+    :func:`_overwrite_partitions`). Returns the list of rewritten
+    partition values.
 
     This is how the companion stays fresh at 10^12 docs without a
     rebuild: the CDC feed (sources.debezium → streaming.incremental)
@@ -108,62 +109,55 @@ def update_digest_companion(
     converges).
     """
     comp = spark.read.parquet(path)
-    # persist: the re-digested upsert frame feeds THREE actions below
-    # (affected-part discovery, touched-key semi-join, final write) —
-    # without it each action would re-read + re-digest the upsert doc
-    # bodies, the exact I/O this function exists to minimize
+    # persist: the re-digested upsert frame feeds TWO actions below
+    # (affected-part discovery, the rewrite), each reading its keys and
+    # its rows — without it each action would re-read + re-digest the
+    # upsert doc bodies, the exact I/O this function exists to minimize
     new = (
         digest_companion_frame(upserts, partition_col).persist()
         if upserts is not None
         else None
     )
     try:
-        gone_keys = None
-        if delete_keys is not None:
-            gone_keys = delete_keys.select(F.col("key").cast("string"))
-        if new is None and gone_keys is None:
-            return []
-
-        # affected partitions: where new rows land + where touched keys
-        # currently live (driver-side list — #partitions, not #rows)
-        parts = set()
-        if new is not None:
-            parts |= {r[0] for r in new.select("part").distinct().collect()}
         touched = None
-        if gone_keys is not None:
-            touched = gone_keys
+        if delete_keys is not None:
+            touched = delete_keys.select(F.col("key").cast("string"))
         if new is not None:
             upk = new.select("key")
             touched = upk if touched is None else touched.unionByName(upk)
+        if touched is None:
+            return []
         # broadcast is right for the normal CDC trickle but fatal for
         # a bulk backfill / wholesale delete whose key set is
         # corpus-sized; with AQE on (production default) let the
         # RUNTIME size decide, pinning the hint only when AQE is off
-        # (same treatment as checks/span_rules.py's dangling-ref join)
+        # (same treatment as checks/span_rules.py's dangling-ref join).
+        # No distinct: a semi/anti join ignores duplicate build keys,
+        # and a distinct would cost a shuffle that changes nothing.
         aqe = (
             spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
             == "true"
         )
-        if touched is not None:
-            touched_d = touched.distinct()
-            t_side = touched_d if aqe else F.broadcast(touched_d)
-            parts |= {
-                r[0]
-                for r in comp.join(t_side, "key", "left_semi")
-                .select("part")
-                .distinct()
-                .collect()
-            }
+        t_side = touched if aqe else F.broadcast(touched)
+
+        # affected partitions: where new rows land + where touched keys
+        # currently live. The set is observed in-plan (driver-side,
+        # #partitions not #rows) while a noop sink drains the rows — no
+        # distinct shuffle — and the same pass fills the upsert cache
+        hit = comp.join(t_side, "key", "left_semi").select("part")
+        if new is not None:
+            hit = new.select("part").unionByName(hit)
+        seen = Observation()
+        hit.observe(seen, F.collect_set("part").alias("parts")).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        parts = set(seen.get["parts"])
         if not parts:
             return []
 
         cur = comp.filter(F.col("part").isin(list(parts)))
-        drop = touched.distinct()
-        keep = cur.join(drop if aqe else F.broadcast(drop), "key", "left_anti")
+        keep = cur.join(t_side, "key", "left_anti")
         out = keep if new is None else keep.unionByName(new.select(*keep.columns))
-        # isolate the new content from the files it is computed from
-        # (Spark refuses to overwrite a path it is reading)
-        out = out.localCheckpoint(eager=True)
         _overwrite_partitions(spark, out, path, parts)
         return sorted(parts)
     finally:
@@ -175,33 +169,38 @@ def _overwrite_partitions(
     spark: SparkSession, frame: DataFrame, path: str, expected_parts: set
 ) -> None:
     """Rewrite exactly ``expected_parts``' part= dirs with ``frame``'s
-    rows. Dynamic overwrite only rewrites partitions PRESENT in the
-    output, so an expected partition the frame emptied must have its
-    dir removed explicitly or stale rows would survive."""
-    frame = frame.persist()
-    try:
-        remaining = {r[0] for r in frame.select("part").distinct().collect()}
-        if remaining:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                frame.write.mode("overwrite").partitionBy("part").parquet(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    finally:
-        frame.unpersist()
-    # emptied partitions: delete through the Hadoop FileSystem API so
-    # hdfs:///s3a:// companion paths work too — a local-only
-    # shutil.rmtree would silently leave the stale part= dir on remote
-    # storage and the next diff would report phantom deletes
-    from opengauss_tools_datachecker_performance_spark.sources.table_io import (
-        hadoop_rmtree,
-    )
+    rows, one file per dir.
 
-    for p in set(expected_parts) - remaining:
-        hadoop_rmtree(spark, os.path.join(path, f"part={p}"))
+    The rows go to a staging dir inside ``path`` first: its ``_`` name
+    hides it from readers of ``path``, and it keeps the write off the
+    files ``frame`` reads (Spark refuses to overwrite a path it is
+    reading). Then each expected dir is swapped for its staged copy.
+    An expected partition the frame emptied has no staged dir, so its
+    old dir is only removed — stale rows must not survive. The swap
+    goes through the Hadoop FileSystem API so hdfs:///s3a:// companion
+    paths work too; a local-only shutil call would silently leave the
+    stale part= dir on remote storage and the next diff would report
+    phantom deletes."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    staging = hpath(path, f"_staging-{uuid.uuid4().hex}")
+    fs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        # rebalance by part: each part= dir is written by one task, so
+        # it holds one file however many batches have rewritten it
+        # (AQE splits only a partition past its advisory size)
+        frame.hint("rebalance", "part").write.partitionBy("part").parquet(
+            staging.toString()
+        )
+        staged = {st.getPath().getName() for st in fs.listStatus(staging)}
+        for p in expected_parts:
+            name = f"part={p}"
+            dst = hpath(path, name)
+            if fs.exists(dst) and not fs.delete(dst, True):
+                raise IOError(f"failed to delete {dst.toString()}")
+            if name in staged and not fs.rename(hpath(staging, name), dst):
+                raise IOError(f"failed to move the rewritten {name} into {path}")
+    finally:
+        fs.delete(staging, True)
 
 
 def maintain_companion_from_cdc(
@@ -254,8 +253,9 @@ def maintain_companion_from_cdc(
         .filter(F.col("_rn") == 1)
         .select("key", "op")
     )
-    up_keys = ops.filter(F.col("op") != "d").select("key").distinct()
-    del_keys = ops.filter(F.col("op") == "d").select("key").distinct()
+    # one row per key already: no distinct before the joins below
+    up_keys = ops.filter(F.col("op") != "d").select("key")
+    del_keys = ops.filter(F.col("op") == "d").select("key")
 
     docs = docs_source.withColumnRenamed(partition_col, "part")
     keyed = docs.withColumn("doc_id", F.col("doc_id").cast("string"))

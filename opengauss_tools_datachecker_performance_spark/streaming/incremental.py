@@ -26,10 +26,16 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.operators.diff import diff_docs
+
+#: one ``batch=<id>`` subdir of incremental_violations.parquet
+_VIOLATION_SCHEMA = pa.schema(
+    [("key", pa.string()), ("diff_type", pa.string()), ("batch_id", pa.int64())]
+)
 
 
 def check_changed_keys(
@@ -37,9 +43,11 @@ def check_changed_keys(
 ) -> DataFrame:
     """IN-list re-check of one batch of changed doc_ids →
     (key, diff_type). Broadcast semi-join: the key list is the small
-    side by construction."""
+    side by construction, and both sides share one broadcast. Duplicate
+    keys need no distinct (a semi-join ignores them), so the keys add
+    no shuffle; the diff of the fetched rows is the only one."""
     keys = F.broadcast(
-        changed_keys.select(F.col("doc_id").cast("string").alias("doc_id")).distinct()
+        changed_keys.select(F.col("doc_id").cast("string").alias("doc_id"))
     )
     src = docs_source.join(keys, "doc_id", "left_semi")
     sink = docs_sink.join(keys, "doc_id", "left_semi")
@@ -91,29 +99,40 @@ class IncrementalChecker:
         self.confirmed: list[tuple[str, str, int]] = []  # (key, diff_type, batch)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Re-check this batch's keys ∪ the keys pending a secondary
+        check. The batch keys are collected once (the only read of
+        ``batch_df``) and the union is held on the driver; it re-enters
+        the plan as one Arrow-backed frame (a Python list would become a
+        parallelized Python RDD, a Python worker per batch), so the
+        check itself is one broadcast and one diff."""
         spark = batch_df.sparkSession
-        # re-check = this batch's keys ∪ keys pending secondary check
-        keys = batch_df.select(F.col("doc_id").cast("string").alias("doc_id"))
-        if self.pending:
-            prev = spark.createDataFrame(
-                [(k,) for k in self.pending], "doc_id string"
-            )
-            keys = keys.unionByName(prev).distinct()
+        cap = self.max_batch_keys
         # limit+1 bounds the driver transfer BEFORE collecting; the cap
-        # is a contract violation, not a squelch — fail with the remedy
-        key_rows = keys.limit(self.max_batch_keys + 1).collect()
-        if len(key_rows) > self.max_batch_keys:
+        # is a contract violation, not a squelch — fail with the remedy.
+        # The rows are not deduplicated, so duplicates count against the
+        # cap: a truncated collect can never pass for the whole batch.
+        rows = (
+            batch_df.select(F.col("doc_id").cast("string"))
+            .limit(cap + 1)
+            .collect()
+        )
+        checked = {r[0] for r in rows} | set(self.pending)
+        if len(rows) > cap or len(checked) > cap:
             raise ValueError(
                 f"incremental batch {batch_id} carries more than "
-                f"max_batch_keys={self.max_batch_keys} changed keys; "
-                "this checker is for CDC-sized batches — run the full "
-                "validate_docs plan for table-scale re-checks, or raise "
-                "max_batch_keys explicitly"
+                f"max_batch_keys={cap} changed keys (pending "
+                "re-checks included); this checker is for CDC-sized "
+                "batches — run the full validate_docs plan for "
+                "table-scale re-checks, or raise max_batch_keys explicitly"
             )
-        checked = {r["doc_id"] for r in key_rows}
-        diffs = {r["key"]: r["diff_type"] for r in check_changed_keys(
-            keys, self.docs_source, self.docs_sink
-        ).collect()}
+        diffs = {}
+        if checked:
+            keys = spark.createDataFrame(
+                pa.table({"doc_id": pa.array(list(checked), pa.string())})
+            )
+            diffs = {r["key"]: r["diff_type"] for r in check_changed_keys(
+                keys, self.docs_source, self.docs_sink
+            ).collect()}
         nxt: dict[str, tuple[str, int]] = {}
         newly: list[tuple[str, str, int]] = []
         for k in checked:
@@ -141,8 +160,9 @@ class IncrementalChecker:
         }
         self.confirmed.extend(newly)
         if newly:
+            records = [dict(zip(_VIOLATION_SCHEMA.names, v)) for v in newly]
             spark.createDataFrame(
-                newly, "key string, diff_type string, batch_id long"
+                pa.Table.from_pylist(records, schema=_VIOLATION_SCHEMA)
             ).write.mode("overwrite").parquet(
                 os.path.join(
                     self.out_dir,

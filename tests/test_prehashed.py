@@ -3,6 +3,7 @@ must produce byte-identical violations + verdicts to the raw path."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.plans.runner import (
@@ -243,6 +244,118 @@ def test_repair_companion_rederives_stale_partitions(spark, tmp_path):
     assert repaired == [0, 1]
     comp2 = read_digest_companion(spark, comp_path)
     assert companion_stale_partitions(comp2, stats).count() == 0
+
+
+def _companion_fixture(spark, tmp_path, n_partitions=4):
+    corpus = str(tmp_path / "corpus")
+    write_corpus(spark, corpus, n_docs=400, n_assets=30, n_partitions=n_partitions)
+    src = spark.read.parquet(f"{corpus}/docs_source.parquet").select(
+        "doc_id", "spans", "part"
+    )
+    comp_path = str(tmp_path / "comp")
+    write_digest_companion(src, comp_path)
+    return src, comp_path
+
+
+def _parquet_files_per_part(comp_path):
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(comp_path, d)))
+        for d in os.listdir(comp_path)
+        if d.startswith("part=")
+    }
+
+
+def test_companion_rewrites_leave_no_persisted_rdd(spark, tmp_path):
+    """A CDC merge and a repair release every RDD they persist or
+    checkpoint, so a long CDC loop holds no growing cache."""
+    from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
+        repair_companion,
+        update_digest_companion,
+    )
+
+    src, comp_path = _companion_fixture(spark, tmp_path)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    picked = src.orderBy("doc_id").limit(6)
+    gone = picked.limit(2).select(F.col("doc_id").alias("key"))
+    # entries persisted before may be garbage-collected meanwhile, so
+    # the check is that no new entry appears
+    update_digest_companion(spark, comp_path, upserts=picked, delete_keys=gone)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    repair_companion(spark, comp_path, src, [0, 1])
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+def test_companion_rewrites_keep_one_file_per_partition(spark, tmp_path):
+    """Repeated CDC merges replace a partition's files instead of
+    adding to them: after five merges touching every partition and a
+    two-partition repair, each part= dir holds exactly one parquet
+    file and the companion still derives exactly from the docs. A
+    partition a merge empties loses its dir."""
+    from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
+        digest_companion_frame,
+        repair_companion,
+        update_digest_companion,
+    )
+
+    src, comp_path = _companion_fixture(spark, tmp_path)
+    by_part: dict = {}
+    for r in src.select("doc_id", "part").collect():
+        by_part.setdefault(r["part"], []).append(r["doc_id"])
+    for i in range(5):
+        keys = [ids[i] for ids in by_part.values()]
+        rewritten = update_digest_companion(
+            spark, comp_path, upserts=src.filter(F.col("doc_id").isin(keys))
+        )
+        assert sorted(rewritten) == sorted(by_part)
+    assert repair_companion(spark, comp_path, src, [0, 1]) == [0, 1]
+    assert _parquet_files_per_part(comp_path) == {f"part={p}": 1 for p in by_part}
+
+    fresh = digest_companion_frame(src)
+    kept = read_digest_companion(spark, comp_path).select(*fresh.columns)
+    assert kept.exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(kept).count() == 0
+
+    # a merge that deletes every key of part 3 removes its dir
+    gone = spark.createDataFrame([(k,) for k in by_part[3]], "key string")
+    assert update_digest_companion(spark, comp_path, delete_keys=gone) == [3]
+    assert _parquet_files_per_part(comp_path) == {
+        f"part={p}": 1 for p in by_part if p != 3
+    }
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_companion_merge_edge_cases_both_aqe_settings(spark, tmp_path, aqe):
+    """The affected-partition set is observed in-plan and the emptied
+    set read off the staged rewrite; both must hold when nothing
+    matches, when a partition empties and when one appears."""
+    from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
+        repair_companion,
+        update_digest_companion,
+    )
+
+    src, comp_path = _companion_fixture(spark, tmp_path, n_partitions=3)
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        unknown = spark.createDataFrame([("no-such-doc",)], "key string")
+        assert update_digest_companion(spark, comp_path, delete_keys=unknown) == []
+        part0 = [r["doc_id"] for r in src.filter(F.col("part") == 0).collect()]
+        # part 0's docs move to a new part 7: 0 empties, 7 appears
+        moved = src.filter(F.col("part") == 0).withColumn("part", F.lit(7))
+        assert update_digest_companion(spark, comp_path, upserts=moved) == [0, 7]
+        assert _parquet_files_per_part(comp_path).keys() == {
+            "part=1", "part=2", "part=7"
+        }
+        comp = read_digest_companion(spark, comp_path)
+        assert sorted(
+            r["key"] for r in comp.filter(F.col("part") == 7).collect()
+        ) == sorted(part0)
+        # repair of a partition the doc table no longer has removes it
+        assert repair_companion(spark, comp_path, src, [7]) == [7]
+        assert _parquet_files_per_part(comp_path).keys() == {"part=1", "part=2"}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def test_companion_cdc_maintenance_stream(spark, tmp_path):

@@ -130,6 +130,37 @@ def test_incremental_max_batch_keys_cap(spark, tmp_path):
     # an in-bounds batch still works
     ok = spark.createDataFrame([("1",), ("2",)], "doc_id string")
     chk.process_batch(ok, 1)
+    # duplicates fill the capped collect and hide a key beyond it: the
+    # truncated rows must not pass for the whole batch
+    hidden = spark.createDataFrame(
+        [("1",)] * 6 + [("7",)], "doc_id string"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="max_batch_keys"):
+        chk.process_batch(hidden, 2)
+
+    # keys pending a secondary check count against the cap too
+    from pyspark.sql import functions as F
+
+    drifted = docs.withColumn(
+        "spans",
+        F.when(
+            F.col("doc_id").isin("0", "1", "2"),
+            F.slice(F.col("spans"), 1, 0),
+        ).otherwise(F.col("spans")),
+    )
+    chk2 = IncrementalChecker(docs, drifted, str(tmp_path), max_batch_keys=5)
+    chk2.process_batch(
+        spark.createDataFrame([("0",), ("1",), ("2",)], "doc_id string"), 0
+    )
+    assert set(chk2.pending) == {"0", "1", "2"}
+    in_bounds = spark.createDataFrame(
+        [("10",), ("11",), ("12",)], "doc_id string"
+    )
+    with pytest.raises(ValueError, match="max_batch_keys"):
+        chk2.process_batch(in_bounds, 1)
+    # the refused batch changed nothing: no pending key was dropped
+    assert set(chk2.pending) == {"0", "1", "2"}
+    assert chk2.confirmed == []
 
 
 def test_global_rank_cumsum_rejects_nulls(spark):

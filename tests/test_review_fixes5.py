@@ -64,12 +64,21 @@ def test_canon_oracle_number_decimal_inputs_unaffected(spark):
         ["--audit-kanon", "a,b:x"],  # non-numeric K
     ],
 )
-def test_malformed_audit_specs_are_argparse_errors(argv):
+def test_malformed_audit_specs_are_argparse_errors(argv, capsys):
     from opengauss_tools_datachecker_performance_spark.__main__ import main
 
     with pytest.raises(SystemExit) as exc:
-        main(["--table", "ignored.parquet", *argv])
+        main(
+            [
+                "--source", "s.parquet",
+                "--report-dir", "out",
+                "--audit-table", "t.parquet",
+                *argv,
+            ]
+        )
     assert exc.value.code == 2  # argparse error, not a traceback
+    # ...raised by the spec check itself, not by a missing required flag
+    assert f"error: {argv[0]} expects" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize("aqe", ["true", "false"])

@@ -68,6 +68,32 @@ def test_overlap_universal_fingerprint_capped_with_ledger(spark):
     assert out[("s0", "s1")]["n_a"] == 1
 
 
+def test_overlap_without_ledger_releases_its_cache(spark):
+    """With no coverage ledger to hand the cached (source, fp) frame
+    to, the matrix releases it itself: no persisted RDD outlives the
+    call, and the rows and schema equal the ledger path's."""
+    df = spark.createDataFrame(
+        [("A", "t1"), ("A", "t2"), ("B", "t1"), ("B", "t3"), ("C", "t2")],
+        "source string, text string",
+    )
+    jsc = spark.sparkContext._jsc
+    # entries persisted before may be garbage-collected meanwhile, so
+    # the check is that no new entry appears
+    before = set(jsc.getPersistentRDDs().keys())
+    eager = source_overlap_matrix(df, coverage_out=None)
+    rows = sorted(eager.collect())
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    cov: dict = {}
+    lazy = source_overlap_matrix(df, coverage_out=cov)
+    try:
+        assert eager.schema == lazy.schema
+        assert rows == sorted(lazy.collect())
+    finally:
+        for frame in cov["persisted"]:
+            frame.unpersist()
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 @pytest.mark.parametrize("aqe", ["true", "false"])
 def test_overlap_same_result_both_aqe_settings(spark, aqe):
     df = spark.createDataFrame(
