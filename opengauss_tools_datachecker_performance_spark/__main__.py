@@ -471,7 +471,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
 def _run(spark: SparkSession, args) -> int:
     from opengauss_tools_datachecker_performance_spark.plans.lineage import (
-        partition_stats,
         pending_partitions,
         record_partitions,
     )
@@ -642,17 +641,23 @@ def _run(spark: SparkSession, args) -> int:
                     "--companion-repair) to clear it"
                 )
 
-    # Partition universe = source ∪ sink: a partition wholesale-deleted
-    # from the source still exists in the sink and must surface its
-    # delete diffs — a source-only universe would silently skip it in
-    # chunked/resumed runs.
-    parts_df = docs_source.select(F.col(src_part_col).alias("part"))
-    if docs_sink is not None:
-        parts_df = parts_df.unionByName(
-            docs_sink.select(F.col(sink_part_col).alias("part"))
-        )
-    universe = sorted(r[0] for r in parts_df.distinct().collect())
-    pending = universe
+    n = args.chunk_partitions
+    # The partition universe is needed up front only to cut waves or to
+    # resume; a single fresh wave takes its partitions from the digest
+    # barrier instead (validate_docs' extras["partitions"]).
+    universe = pending = None
+    if n > 0 or args.resume:
+        # universe = source ∪ sink: a partition wholesale-deleted from
+        # the source still exists in the sink and must surface its
+        # delete diffs — a source-only universe would silently skip it
+        # in chunked/resumed runs.
+        parts_df = docs_source.select(F.col(src_part_col).alias("part"))
+        if docs_sink is not None:
+            parts_df = parts_df.unionByName(
+                docs_sink.select(F.col(sink_part_col).alias("part"))
+            )
+        universe = sorted(r[0] for r in parts_df.distinct().collect())
+        pending = universe
     if args.resume and args.checkpoint_dir:
         pending = pending_partitions(spark, args.checkpoint_dir, universe)
         print(
@@ -663,7 +668,6 @@ def _run(spark: SparkSession, args) -> int:
             print("[resume] nothing to do")
             return _finish(spark, args, {}, run_id, refresh_only=True)
 
-    n = args.chunk_partitions
     # Chunked mode is a property of the REPORT LAYOUT, not of how many
     # waves remain: a resumed run whose pending set fits one wave must
     # still write chunk=<id> subdirs (a base-dir overwrite would delete
@@ -701,7 +705,7 @@ def _run(spark: SparkSession, args) -> int:
     progress = ProgressTracker(args.report_dir, run_id)
     for ch in chunks:
         # fast path: a full single wave needs no partition filter
-        only = None if (not chunked and set(ch) == set(universe)) else ch
+        only = ch if chunked or ch != universe else None
         result = validate_docs(
             docs_source,
             docs_sink,
@@ -738,20 +742,17 @@ def _run(spark: SparkSession, args) -> int:
         if not result.schema_ok:
             schema_ok, schema_msg = False, result.schema_message
             break
-        # liveness/rate line per wave (rows counted off the persisted
-        # digest cache — no extra scan)
-        progress.record(len(ch), result.extras["digests_source"].count())
+        # liveness/rate line and lineage per wave, both from the
+        # per-partition (part, n_rows, digest) stats the digest barrier
+        # collected: no Spark job of their own and no body re-scan —
+        # the barrier folds the same v_hash the companion stores, so
+        # raw and companion runs record bit-identical lineage
+        stats = result.extras["partition_stats"]
+        progress.record(
+            len(result.extras["partitions"]), sum(r[1] for r in stats)
+        )
         if args.checkpoint_dir:
-            # companion mode: partition_stats' enriched fast path folds
-            # the STORED v_hash — the recorded lineage stays body-free
-            # and bit-identical to the raw-table digest
-            src = docs_source.filter(F.col(src_part_col).isin(ch))
-            record_partitions(
-                spark,
-                args.checkpoint_dir,
-                run_id,
-                partition_stats(src, partition_col=src_part_col),
-            )
+            record_partitions(spark, args.checkpoint_dir, run_id, stats)
         # a single full wave's persisted enriched digest frame covers
         # the whole source: hand it to the sections (a snapshot delta
         # then never digests the source a second time) and unpersist

@@ -61,10 +61,25 @@ def record_partitions(
     spark: SparkSession,
     checkpoint_dir: str,
     run_id: str,
-    partition_stats: DataFrame,
+    partition_stats: DataFrame | list[tuple],
 ) -> None:
     """Append (part, n_rows, digest) stats as 'done' ledger rows.
-    ``partition_stats`` must have columns part, n_rows, digest."""
+    ``partition_stats``: a frame with columns part, n_rows, digest, or
+    those rows already on the driver (validate_docs' barrier collects
+    them as extras["partition_stats"])."""
+    if not isinstance(partition_stats, DataFrame):
+        import pyarrow as pa
+
+        part, n_rows, digest = zip(*partition_stats) if partition_stats else ((),) * 3
+        partition_stats = spark.createDataFrame(
+            pa.table(
+                {
+                    "part": pa.array(part),
+                    "n_rows": pa.array(n_rows, pa.int64()),
+                    "digest": pa.array(digest, pa.int64()),
+                }
+            )
+        )
     now = time.time()
     out = partition_stats.select(
         F.lit(run_id).alias("run_id"),

@@ -42,9 +42,12 @@ def write_frames(
     result: ValidationResult, out_dir: str, chunk: int | None = None
 ) -> None:
     """Write the violation + verdict frames. With ``chunk`` set, the
-    write is scoped (and idempotent) to that wave's subdirectory."""
+    write is scoped (and idempotent) to that wave's subdirectory. The
+    violations are a union of per-check branches, each of which would
+    write its own files; the rebalance hint lets AQE pack small sets
+    into one file and still split a large one."""
     os.makedirs(out_dir, exist_ok=True)
-    result.violations.write.mode("overwrite").parquet(
+    result.violations.hint("rebalance").write.mode("overwrite").parquet(
         _frame_path(out_dir, "violations.parquet", chunk)
     )
     result.verdicts.write.mode("overwrite").parquet(

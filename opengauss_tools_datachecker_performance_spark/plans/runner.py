@@ -43,6 +43,9 @@ from opengauss_tools_datachecker_performance_spark.functions.hashing import k_ha
 from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
 )
+from opengauss_tools_datachecker_performance_spark.plans.lineage import (
+    partition_stats,
+)
 
 CONSTRAINTS = ["consistency", "unique", "referential", "null_text", "drift"]
 
@@ -60,6 +63,24 @@ class ValidationResult:
 
 def _empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], _VIOLATION_SCHEMA)
+
+
+def _partition_stats(dig: DataFrame) -> list[tuple]:
+    """(part, n_rows, digest) per partition of a digest frame, collected
+    (the lineage digest folds the frame's stored ``v_hash``)."""
+    return [tuple(r) for r in partition_stats(dig).collect()]
+
+
+def _arrow_frame(spark: SparkSession, schema: T.StructType, rows: list) -> DataFrame:
+    """A driver-held row list as one Arrow-backed frame (no Python
+    worker runs when it is scanned)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def drift_verdicts(drift: DataFrame) -> DataFrame:
@@ -280,29 +301,34 @@ def validate_docs(
     # broadcast future while the main job's stages sit idle. (A
     # driver-side exchange of the bucket signatures as this barrier
     # was measured worse; README "Performance notes" has the A/B.)
-    if dig_sink is not None:
-        # materialize both sides' caches as CONCURRENT jobs (Spark
-        # schedulers fill one job's straggler/stage-gap slack with
-        # the other's tasks; on a real cluster this overlaps two
-        # independent table scans). A per-barrier AQE exemption
-        # (session-conf toggle around these counts) was built and
-        # interleaved-A/B-measured: WORSE (min 33.9 s vs 30.5 s at
-        # local[8] AQE-on, 3M docs) — caches built under a
-        # different AQE setting than their consumers cost more
-        # than AQE's stage decomposition does, so the barrier
-        # inherits the session setting untouched.
-        from concurrent.futures import ThreadPoolExecutor
+    # The barrier action is a per-partition (n_rows, digest) collect,
+    # not a bare count: it fills the cache just the same, and its
+    # #partitions-sized result is every partition-level figure the
+    # wave needs — the partition universe, the progress count and the
+    # lineage stats — so none of them costs a Spark job of its own.
+    # The reference takes a slice's row count and table hash the same
+    # way, while extracting it (SliceExtend.count / tableHash).
+    # Both sides run as CONCURRENT jobs (Spark schedulers fill one
+    # job's straggler/stage-gap slack with the other's tasks; on a
+    # real cluster this overlaps two independent table scans). A
+    # per-barrier AQE exemption (session-conf toggle around these
+    # actions) was built and interleaved-A/B-measured: WORSE (min
+    # 33.9 s vs 30.5 s at local[8] AQE-on, 3M docs) — caches built
+    # under a different AQE setting than their consumers cost more
+    # than AQE's stage decomposition does, so the barrier inherits
+    # the session setting untouched.
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs = [pool.submit(dig_src.count), pool.submit(dig_sink.count)]
-            for f in fs:
-                f.result()
-    else:
-        dig_src.count()
-
-    parts_all = dig_src.select("part").distinct()
-    if dig_sink is not None:
-        parts_all = parts_all.union(dig_sink.select("part")).distinct()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        sink_stats = (
+            pool.submit(_partition_stats, dig_sink) if dig_sink is not None else None
+        )
+        src_stats = _partition_stats(dig_src)
+        sink_stats = sink_stats.result() if sink_stats is not None else []
+    parts_all = sorted(
+        {r[0] for r in src_stats} | {r[0] for r in sink_stats},
+        key=lambda p: (p is None, p),
+    )
 
     pieces: list[DataFrame] = []
     diffs: DataFrame | None = None
@@ -373,9 +399,12 @@ def validate_docs(
     # DataCheckRunnable.java:165-182,299-322), except a flooded
     # partition still FAILS with its exact count instead of aborting
     # the run; only the per-row enumeration stops at the cap. ---
-    counts = violations.groupBy("part", "constraint").agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
+    counts = {
+        (r["part"], r["constraint"]): r["n_violations"]
+        for r in violations.groupBy("part", "constraint")
+        .agg(F.count(F.lit(1)).alias("n_violations"))
+        .collect()  # bounded: #partitions × #constraints
+    }
     if max_violations_per_partition is not None:
         from pyspark.sql import Window
 
@@ -401,17 +430,17 @@ def validate_docs(
         else drift_from_profiles(drift_prof, threshold=drift_threshold)
     )
 
-    # --- verdict grid: partitions × constraints, zero-filled.
-    # explode(array(lit…)) instead of crossJoin(createDataFrame([...])):
-    # a Python-list frame plans as a PythonRDD scan, and under the
-    # cartesian it re-evaluated per OUTPUT PARTITION — measured 256
-    # tasks × ~200 ms of Python-worker round trip (~42 slot-seconds of
-    # zero-CPU dead time) in the final collect stage at any
-    # parallelism. The literal explode stays in codegen. ---
-    # only constraints that actually RAN appear: a no-sink run never
+    # --- verdict grid: partitions × constraints, zero-filled,
+    # assembled on the driver from the collected counts and drift rows
+    # (both #partitions-sized; summarize_dir collects the whole grid
+    # anyway) and handed back as one Arrow-backed frame. Planned as
+    # Spark joins instead, the grid re-ran the drift subtree twice
+    # (the drift rows and the vanished-partition anti-join) with a
+    # broadcast inside each copy.
+    # Only constraints that actually RAN appear: a no-sink run never
     # compared anything, a no-assets run never resolved a media_ref —
     # reporting those as 'pass' would present unexecuted checks as
-    # green (the grid row's absence is the honest signal)
+    # green (the grid row's absence is the honest signal).
     active = [
         c
         for c in CONSTRAINTS
@@ -419,33 +448,33 @@ def validate_docs(
         and (c != "consistency" or docs_sink is not None)
         and (c != "referential" or assets is not None)
     ]
-    grid = parts_all.select(
-        "part",
-        F.explode(F.array(*[F.lit(c) for c in active])).alias("constraint"),
-    )
-    verdicts = (
-        grid.join(counts, ["part", "constraint"], "left")
-        .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-        .withColumn(
-            "status", F.when(F.col("n_violations") > 0, "fail").otherwise("pass")
-        )
-    )
+    rows = []
+    for p in parts_all:
+        for c in active:
+            n = counts.get((p, c), 0)
+            rows.append((p, c, n, "fail" if n > 0 else "pass"))
     if drift is not None:
-        dv = drift_verdicts(drift)
+        dv = [tuple(r) for r in drift_verdicts(drift).collect()]
         # a sink-only partition has NO source rows, so no drift profile
         # exists for it — its distribution vanished, which IS drift;
         # emit an explicit fail instead of leaving a hole in the
         # partitions × constraints grid
-        vanished = (
-            parts_all.join(dv.select("part"), "part", "left_anti")
-            .select(
-                "part",
-                F.lit("drift").alias("constraint"),
-                F.lit(1).cast("long").alias("n_violations"),
-                F.lit("fail").alias("status"),
-            )
-        )
-        verdicts = verdicts.unionByName(dv).unionByName(vanished)
+        profiled = {r[0] for r in dv}
+        rows += dv + [(p, "drift", 1, "fail") for p in parts_all if p not in profiled]
+    verdicts = _arrow_frame(
+        spark,
+        T.StructType(
+            [
+                T.StructField("part", dig_src.schema["part"].dataType),
+                T.StructField("constraint", T.StringType(), False),
+                # nullable only beside drift rows (a NULL drift flag has
+                # no count), as the grid's parquet schema always was
+                T.StructField("n_violations", T.LongType(), drift is not None),
+                T.StructField("status", T.StringType(), False),
+            ]
+        ),
+        rows,
+    )
 
     return ValidationResult(
         violations=violations,
@@ -453,7 +482,8 @@ def validate_docs(
         schema_ok=True,
         schema_message=sres.message,
         extras={
-            "drift": drift,
+            "partitions": parts_all,
+            "partition_stats": src_stats,
             "drift_profiles": drift_prof,
             "digests_source": dig_src,
             "digests_sink": dig_sink,

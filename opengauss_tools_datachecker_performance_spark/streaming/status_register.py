@@ -43,7 +43,14 @@ def track_slice_status(
     Each micro-batch emits the post-batch status of every slice that
     received events, so a downstream ``foreachBatch`` can react to
     slices *entering* the ready/done states.
+
+    A slice's state is dropped once it reaches DONE: it has nothing
+    left to wait for, so the state store holds only slices still in
+    flight, however long the stream runs. A later event for a dropped
+    slice starts a fresh round from 0 (a re-extracted slice is checked
+    again).
     """
+    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -52,9 +59,11 @@ def track_slice_status(
     ) -> Iterator["pd.DataFrame"]:
         st = state.get[0] if state.exists else 0
         for pdf in pdfs:
-            for v in pdf[status_col]:
-                st |= int(v)
-        state.update((st,))
+            st |= int(np.bitwise_or.reduce(pdf[status_col].to_numpy(), initial=0))
+        if st == DONE:
+            state.remove()
+        else:
+            state.update((st,))
         yield pd.DataFrame(
             {
                 "slice_no": [int(key[0])],

@@ -202,6 +202,11 @@ def test_cli_kill_and_resume(tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     corpus = str(tmp_path / "corpus")
+    # every child session gets a small heap: the default is a 12g
+    # pre-touched heap, which does not fit beside the suite's own
+    # session on a 15 GB host ("Java gateway process exited")
+    env = dict(os.environ, SPARK_GRAFT_SHUFFLE_PARTITIONS="8",
+               SPARK_GRAFT_DRIVER_MEM="2g")
     # generate via a subprocess session so the test session's master
     # settings don't matter
     gen = subprocess.run(
@@ -212,7 +217,7 @@ def test_cli_kill_and_resume(tmp_path):
             "s = get_spark(app_name='gen', master='local[4]', shuffle_partitions=8); "
             "write_corpus(s, %r, n_docs=3000, n_assets=100, n_partitions=8); s.stop()"
         ) % (repo, corpus)],
-        cwd=repo, capture_output=True, text=True, timeout=300,
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
     )
     assert gen.returncode == 0, gen.stderr[-2000:]
     report = str(tmp_path / "report")
@@ -226,8 +231,6 @@ def test_cli_kill_and_resume(tmp_path):
         "--chunk-partitions", "2", "--resume",
         "--master", "local[4]",
     ]
-    env = dict(os.environ, SPARK_GRAFT_SHUFFLE_PARTITIONS="8",
-               SPARK_GRAFT_DRIVER_MEM="2g")
     p = subprocess.Popen(cmd, cwd=repo, env=env,
                          stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                          text=True)

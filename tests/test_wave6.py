@@ -139,3 +139,49 @@ def test_streaming_status_register_accumulates_across_batches(spark, tmp_path):
         ).collect()
     ]
     assert (3, True, False) in seen and (7, False, True) in seen
+
+
+def test_streaming_status_register_state_is_bounded(spark, tmp_path):
+    """A slice's keyed state is dropped at DONE(7): across batches that
+    each complete ten slices, the state store keeps only the one slice
+    still in flight instead of growing by ten per batch."""
+    from opengauss_tools_datachecker_performance_spark.streaming.status_register import (
+        track_slice_status,
+    )
+
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed, exist_ok=True)
+    for b in range(4):
+        rows = [(10 * b + i, st) for i in range(10) for st in (1, 2, 4)]
+        if b == 0:
+            rows.append((100, 1))  # reported by the source only: stays
+        spark.createDataFrame(rows, "slice_no int, st int").coalesce(1).write.parquet(
+            f"{feed}/w{b}"
+        )
+    stream = (
+        spark.readStream.schema("slice_no int, st int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed + "/w*")
+    )
+    q = (
+        track_slice_status(stream)
+        .writeStream.format("memory")
+        .queryName("slice_status_bounded")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        totals = [
+            p["stateOperators"][0]["numRowsTotal"]
+            for p in q.recentProgress
+            if p["numInputRows"] > 0
+        ]
+    finally:
+        q.stop()
+    assert totals == [1, 1, 1, 1]
+    done = spark.sql(
+        "SELECT count(*) FROM slice_status_bounded WHERE done"
+    ).collect()[0][0]
+    assert done == 40
