@@ -399,14 +399,18 @@ def _ledger_reference_stats(spark: SparkSession, checkpoint_dir: str):
     """Latest 'done' ledger entry per partition, shaped for
     prehashed.companion_stale_partitions: (part, n_rows, digest).
     Body-free — the ledger recorded these stats when the partition
-    last validated."""
+    last validated. Only entries of the current fold version count: a
+    partition whose entries predate it reads as unaudited, not stale."""
     from pyspark.sql import Window
 
+    from opengauss_tools_datachecker_performance_spark.digest import FOLD_VERSION
     from opengauss_tools_datachecker_performance_spark.plans.lineage import (
         read_ledger,
     )
 
-    led = read_ledger(spark, checkpoint_dir).filter(F.col("status") == "done")
+    led = read_ledger(spark, checkpoint_dir).filter(
+        (F.col("status") == "done") & (F.col("fold") == FOLD_VERSION)
+    )
     w = Window.partitionBy("part").orderBy(F.col("wall_ts").desc())
     return (
         led.withColumn("_rn", F.row_number().over(w))
@@ -745,7 +749,7 @@ def _run(spark: SparkSession, args) -> int:
         # liveness/rate line and lineage per wave, both from the
         # per-partition (part, n_rows, digest) stats the digest barrier
         # collected: no Spark job of their own and no body re-scan —
-        # the barrier folds the same v_hash the companion stores, so
+        # the barrier folds the same hashes the companion stores, so
         # raw and companion runs record bit-identical lineage
         stats = result.extras["partition_stats"]
         progress.record(

@@ -1,7 +1,7 @@
 """Distribution-shape checks: Benford first-digit profile, categorical
 chi-square drift, and robust (median/MAD) outlier detection.
 
-Complements checks/drift.py (numeric quantile/t-digest drift) with the
+Complements checks/drift.py (numeric quantile-profile drift) with the
 categorical and fraud-detection-shaped families.  All outputs round
 through fixed-scale decimals so DuckDB oracles hash identically.
 """

@@ -1,42 +1,23 @@
 """Distribution-drift check (SURVEY.md A12) — new-engine capability.
 
 Per-partition quantile profile of a metric (e.g. doc text length)
-compared against the global profile with a KS-style statistic
-(max CDF gap over the quantile grid).  Two implementations:
-
-* ``drift_by_quantiles`` — pure built-ins: one pass computing
-  ``percentile_approx`` per partition + globally, then the max
-  |q_part - q_global| gap normalized into a KS-ish score. No Python.
-* ``tdigest_profiles`` — per-partition t-digest sketches via
-  ``applyInPandas`` (Arrow-batched; the one genuinely-Python piece
-  of the engine, per the SURVEY §7 plan). Sketches are mergeable, so
-  at 100 TB the pattern is: sketch per scan-partition (map side) →
-  merge per logical partition → tiny driver-side compare.  The
-  t-digest here is a compact self-contained implementation (centroid
-  list with size-capped merge), derived from the published algorithm
-  (Dunning & Ertl, "Computing extremely accurate quantiles using
-  t-digests", arXiv:1902.04023).
+compared against a robust baseline with a KS-style statistic (max
+relative quantile gap over the grid). One implementation, all
+built-ins: :func:`quantile_profiles` computes ``percentile_approx``
+per partition (a tiny frame, one row per partition, mergeable by
+union across chunked waves) and :func:`drift_from_profiles` judges
+any such profile frame. A profile from another sketch — e.g. the
+native KLL ``kll_sketch_agg_double`` read out with
+``kll_sketch_get_quantile_double`` (the ``drift_tdigest`` catalog
+entry) — is judged by the same function.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_PROBS = [0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95]
-
-
-def doc_text_length(docs: DataFrame) -> DataFrame:
-    """(part, doc_id, metric): total text length per doc — the default
-    drift metric for interleaved docs."""
-    total_len = F.aggregate(
-        "spans",
-        F.lit(0),
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
-    )
-    return docs.select("part", "doc_id", total_len.cast("double").alias("metric"))
 
 
 def quantile_profiles(
@@ -59,8 +40,12 @@ def drift_from_profiles(
     group_col: str = "part",
     threshold: float = 0.3,
 ) -> DataFrame:
-    """Judge drift over a profile frame from :func:`quantile_profiles`.
-    Baseline: per-prob median across groups (#groups rows — trivial)."""
+    """Judge drift over a ``(group, q array)`` profile frame, e.g. from
+    :func:`quantile_profiles` → (group, drift_score, drifted).
+    Baseline: the per-prob *median across groups* (#groups rows —
+    trivial), so one drifted partition can't pollute its own
+    yardstick (a pooled-global baseline shifts with the outlier).
+    drift_score = max relative quantile gap over the grid."""
     overall = (
         per_group.select(F.posexplode("q").alias("i", "qv"))
         .groupBy("i")
@@ -87,133 +72,3 @@ def drift_from_profiles(
         (gap > threshold).alias("drifted"),
     )
 
-
-def drift_by_quantiles(
-    metrics: DataFrame,
-    group_col: str = "part",
-    metric_col: str = "metric",
-    probs: list[float] | None = None,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """→ (part, drift_score, drifted): per-group quantile profile vs a
-    **robust baseline** — the per-prob *median across groups* — so one
-    drifted partition can't pollute its own yardstick (a pooled-global
-    baseline shifts with the outlier). drift_score = max relative
-    quantile gap over the grid."""
-    return drift_from_profiles(
-        quantile_profiles(metrics, group_col, metric_col, probs),
-        group_col=group_col,
-        threshold=threshold,
-    )
-
-
-# ---------------------------------------------------------------------------
-# t-digest via applyInPandas (Arrow path)
-# ---------------------------------------------------------------------------
-
-_TD_SCHEMA = (
-    "part int, n bigint, centroids array<struct<mean:double, weight:double>>"
-)
-
-
-def _compress(means: np.ndarray, weights: np.ndarray, delta: int = 100):
-    """One t-digest compression pass: sort by mean, merge neighbors
-    while the merged centroid respects the scale-function size bound."""
-    order = np.argsort(means)
-    means, weights = means[order], weights[order]
-    total = weights.sum()
-    out_m: list[float] = []
-    out_w: list[float] = []
-    q0 = 0.0
-    cur_m, cur_w = means[0], weights[0]
-    for m, w in zip(means[1:], weights[1:]):
-        q_limit = q0 + 4 * total * (q0 + cur_w / total) * (1 - (q0 + cur_w / total)) / delta
-        if cur_w + w <= max(q_limit, 1.0):
-            cur_m = (cur_m * cur_w + m * w) / (cur_w + w)
-            cur_w += w
-        else:
-            out_m.append(cur_m)
-            out_w.append(cur_w)
-            q0 += cur_w / total if total else 0.0
-            cur_m, cur_w = m, w
-    out_m.append(cur_m)
-    out_w.append(cur_w)
-    return np.array(out_m), np.array(out_w)
-
-
-def tdigest_profiles(
-    metrics: DataFrame,
-    group_col: str = "part",
-    metric_col: str = "metric",
-    delta: int = 100,
-) -> DataFrame:
-    """Per-group t-digest sketch: (part, n, centroids). Mergeable —
-    union two profile frames and re-apply to combine runs."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[metric_col].dropna().to_numpy(dtype=float)
-        part = pdf[group_col].iloc[0]
-        if len(vals) == 0:
-            return pd.DataFrame({"part": [part], "n": [0], "centroids": [[]]})
-        m, w = _compress(vals, np.ones_like(vals), delta)
-        cents = [{"mean": float(a), "weight": float(b)} for a, b in zip(m, w)]
-        return pd.DataFrame({"part": [part], "n": [len(vals)], "centroids": [cents]})
-
-    return metrics.groupBy(group_col).applyInPandas(build, schema=_TD_SCHEMA)
-
-
-def tdigest_quantile(centroids: list[dict], n: float, q: float) -> float:
-    """Driver-side quantile read-out from a centroid list."""
-    if not centroids:
-        return float("nan")
-    cents = sorted(centroids, key=lambda c: c["mean"])
-    target = q * n
-    cum = 0.0
-    for c in cents:
-        if cum + c["weight"] >= target:
-            return c["mean"]
-        cum += c["weight"]
-    return cents[-1]["mean"]
-
-
-def drift_by_tdigest(
-    metrics: DataFrame,
-    group_col: str = "part",
-    metric_col: str = "metric",
-    probs: list[float] | None = None,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """t-digest variant of the drift verdict: sketches are built
-    distributed (Arrow), the per-group-vs-baseline compare happens on
-    the tiny profile frame (#groups rows). Baseline = per-prob median
-    across groups (robust; see drift_by_quantiles)."""
-    import statistics
-
-    probs = probs or DEFAULT_PROBS
-    profiles = tdigest_profiles(metrics, group_col, metric_col)
-    rows = profiles.collect()  # #groups rows — small by construction
-    if not rows:
-        return metrics.sparkSession.createDataFrame(
-            [], f"{group_col} int, n bigint, drift_score double, drifted boolean"
-        )
-    per_group_q = {
-        r[group_col]: [
-            tdigest_quantile([c.asDict() for c in r["centroids"]], r["n"], p)
-            for p in probs
-        ]
-        for r in rows
-    }
-    global_q = [
-        statistics.median(per_group_q[g][i] for g in per_group_q)
-        for i in range(len(probs))
-    ]
-    out = []
-    for r in rows:
-        qs = per_group_q[r[group_col]]
-        score = max(
-            abs(a - b) / max(abs(b), 1.0) for a, b in zip(qs, global_q)
-        ) if r["n"] else 0.0
-        out.append((r[group_col], int(r["n"]), float(score), bool(score > threshold)))
-    return metrics.sparkSession.createDataFrame(
-        out, f"{group_col} int, n bigint, drift_score double, drifted boolean"
-    )

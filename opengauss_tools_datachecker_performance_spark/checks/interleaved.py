@@ -61,7 +61,7 @@ def media_context_audit(docs: DataFrame, min_words: int = 8) -> DataFrame:
     sort materializes ONCE into a projected column before the lambdas
     reference it (Catalyst does no CSE inside higher-order-function
     lambdas — the neighbor lookups would otherwise re-sort the array
-    per element; same discipline as plans/runner._enriched_digests)."""
+    per element; same discipline as digest._enriched_digests)."""
     base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         _sorted_spans(F.col("spans")).alias("_s"),

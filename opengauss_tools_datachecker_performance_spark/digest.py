@@ -2,19 +2,20 @@
 
 Replaces the reference's extract→Kafka→bucket→Merkle pipeline
 (datachecker-check/.../modules/bucket/BuilderBucketHandler.java,
-.../merkle/MerkleTree.java) with a partition-parallel digest tree in
-three DataFrame stages:
+.../merkle/MerkleTree.java) with a partition-parallel digest tree:
 
 1. **row digests** — ``(key, k_hash, v_hash, bucket)`` per row; the
    reference's RowDataHash (datachecker-common/.../entry/extract/RowDataHash.java:34-65).
-2. **bucket signatures** — XOR fold of ``v_hash`` per bucket
-   (Bucket.java:84-87: ``sig ^= vHash`` — commutative, so a plain
-   shuffle agg with map-side partial aggregation; no sort needed).
-3. **level-2 rollup** — bucket groups of 2^k buckets XOR-folded again;
-   stands in for the Merkle internal nodes (MerkleTree.java:203-212).
-   Two levels suffice: the reference caps trees at 2^15 leaves and
-   only uses the tree to *prune equal subtrees* before row compare;
-   our pruning join does the same with O(#buckets) digest rows.
+2. **signature fold** — :func:`signature_fold`, the one XOR fold of
+   key-bound row hashes (Bucket.java:84-87: ``sig ^= vHash`` —
+   commutative, so a plain shuffle agg with map-side partial
+   aggregation; no sort needed). Bucket signatures, the two-phase
+   diff's prune (operators.diff.mismatched_buckets) and the
+   per-partition lineage digest (plans.lineage.partition_stats) all
+   fold through it. The reference only uses its Merkle tree to
+   *prune equal subtrees* before row compare; the pruning join does
+   the same with O(#buckets) signature rows, so no internal level is
+   built.
 
 Bucket routing mirrors BuilderBucketHandler.java:116-131
 (``bucket = |kHash| & (2^n - 1)``): ``pmod(xxhash64(key), n_buckets)``.
@@ -30,9 +31,13 @@ order-insensitive, so no global sort ever happens.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from opengauss_tools_datachecker_performance_spark.checks.schema_check import (
+    DOCS_SCHEMA,
+)
 from opengauss_tools_datachecker_performance_spark.functions.hashing import (
     k_hash,
     pk_key,
@@ -235,15 +240,6 @@ def span_text_volume_from_sorted(sorted_spans_col: Column) -> Column:
     )
 
 
-def span_sequence_hash_col(spans_col: Column) -> Column:
-    """Span-sequence digest off a raw spans column: sort by offset,
-    per-span multi-arg xxhash64, order-sensitive fold (see
-    span_sequence_hash_from_hashes for the measured rationale)."""
-    return span_sequence_hash_from_hashes(
-        span_hashes_from_sorted(_sorted_spans(spans_col))
-    )
-
-
 def doc_digests(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
@@ -260,40 +256,130 @@ def doc_digests(
     return docs.select(
         key.alias("key"),
         kh.alias("k_hash"),
-        span_sequence_hash_col(F.col(spans_col)).alias("v_hash"),
+        span_sequence_hash_from_hashes(
+            span_hashes_from_sorted(_sorted_spans(F.col(spans_col)))
+        ).alias("v_hash"),
         bucket_of(kh, num_buckets).alias("bucket"),
         *[F.col(c) for c in (carry_cols or [])],
     )
 
 
+#: version of :func:`signature_fold`'s value. A fold stored under
+#: another version (the lineage ledger's ``digest``) is not comparable
+#: with a fresh one. Unversioned (NULL) = the fold of ``v_hash`` alone.
+FOLD_VERSION = 1
+
+
+def signature_fold(where: Column | None = None) -> Column:
+    """The one XOR fold of a digest frame's rows (``k_hash``,
+    ``v_hash``): ``bit_xor(xxhash64(k_hash, v_hash))``, over the rows
+    matching ``where`` if given.
+
+    The folded value is bound to the key, like the reference's
+    ``vHash``, which hashes key columns too (RowDataHash.java:34-65;
+    Bucket.java:84-87 folds it). A fold of ``v_hash`` alone reads two
+    docs that swap contents as equal. The stored per-row ``v_hash``
+    stays key-free, so the diff join and written companions keep their
+    meaning. ``bit_xor`` is commutative: map-side partial aggregation,
+    no sort."""
+    h = F.xxhash64(F.col("k_hash"), F.col("v_hash"))
+    return F.bit_xor(h if where is None else F.when(where, h))
+
+
 def bucket_signatures(row_digest_df: DataFrame) -> DataFrame:
-    """Leaf level of the digest tree: XOR fold of v_hash per bucket
-    (Bucket.java:84-87). ``bit_xor`` is a built-in commutative agg →
-    map-side partial aggregation, one narrow shuffle of #buckets rows.
-    """
+    """Leaf level of the digest tree: :func:`signature_fold` per bucket,
+    one narrow shuffle of #buckets rows."""
     return row_digest_df.groupBy("bucket").agg(
-        F.expr("bit_xor(v_hash)").alias("sig"),
+        signature_fold().alias("sig"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
 
-def tree_rollup(bucket_sig_df: DataFrame, fanout_bits: int = 6) -> DataFrame:
-    """Internal digest-tree level: 2^fanout_bits buckets per node,
-    node sig = XOR of child sigs (stands in for MerkleTree.java:203-212's
-    Adler32(left‖right); checksum choice is engine-internal, the
-    contract is subtree-equality pruning)."""
+#: the digest-companion contract: a table carrying exactly what the
+#: checks consume lets validation skip the doc-body scan entirely —
+#: ~8 B/span of hashes instead of the text bytes (the measured
+#: memory-bandwidth ceiling of the digest stage). Produced at ingest
+#: by sources.prehashed.write_digest_companion.
+ENRICHED_COLS = [
+    "key",
+    "k_hash",
+    "span_hashes",
+    "bucket",
+    "part",
+    "text_len",
+    "media_spans",
+    "null_text_idxs",
+    "v_hash",
+]
+
+
+def is_enriched(df: DataFrame) -> bool:
+    """True if ``df`` already carries the full digest-companion
+    contract (ENRICHED_COLS) — validation then runs every check off it
+    without ever reading doc bodies."""
+    return set(ENRICHED_COLS) <= set(df.columns)
+
+
+def enriched_schema(spark: SparkSession) -> T.StructType:
+    """The companion contract's exact types, derived from the docs
+    schema through the real projection (never hand-maintained)."""
+    empty = spark.createDataFrame([], DOCS_SCHEMA).withColumn("part", F.lit(0))
+    return _enriched_digests(empty).schema
+
+
+def _enriched_digests(docs: DataFrame) -> DataFrame:
+    """A doc's digest, the one projection of a ``(doc_id, spans, part)``
+    scan that carries everything the cheap checks need: span-sequence
+    digest + k_hash (diff, uniqueness, the signature folds), partition,
+    and the drift metric — so diff, uniqueness, drift, the partition
+    universe and lineage all run off this one frame without re-reading
+    doc bodies.
+
+    The spans sort ONCE into a materialized attribute; the digest is
+    the per-span multi-arg xxhash64 fold (boundary-safe without
+    building a rendered string — span_sequence_hash_from_hashes has
+    the measured numbers) and the drift metric is the byte volume of
+    the same sorted spans (monotone in text volume, which is exactly
+    what the distribution-drift check needs).
+
+    Digest-companion fast path: input that already carries the full
+    ENRICHED_COLS contract (written at ingest by
+    sources.prehashed.write_digest_companion) passes through with a
+    column-pruning projection — no body scan, no hashing."""
+    if is_enriched(docs):
+        return docs.select(*ENRICHED_COLS)
+    key = F.col("doc_id").cast("string")
+    kh = k_hash(key)
+    s = F.col("_s")
     return (
-        bucket_sig_df.withColumn(
-            "node", (F.col("bucket") / F.lit(1 << fanout_bits)).cast("int")
+        docs.select(
+            key.alias("key"),
+            kh.alias("k_hash"),
+            _sorted_spans(F.col("spans")).alias("_s"),
+            bucket_of(kh).alias("bucket"),
+            F.col("part"),
         )
-        .groupBy("node")
-        .agg(F.expr("bit_xor(sig)").alias("sig"), F.sum("n_rows").alias("n_rows"))
-    )
-
-
-def table_digest(bucket_sig_df: DataFrame) -> DataFrame:
-    """Root digest: single (sig, n_rows) row — the analogue of the
-    reference's table hash (TableMetadata.tableHash)."""
-    return bucket_sig_df.agg(
-        F.expr("bit_xor(sig)").alias("sig"), F.sum("n_rows").alias("n_rows")
+        .select(
+            "key",
+            "k_hash",
+            # per-span hash array materializes as its own attribute so
+            # the v_hash fold below reads it instead of re-hashing
+            # (Spark does NO cross-expression CSE) — and so the diff
+            # join can locate the first divergent span from the cache
+            # (classify_diff(locate_spans=True)) without ever
+            # re-reading doc bodies. ~8 B × spans/doc of extra cache —
+            # still an order of magnitude under the bodies.
+            span_hashes_from_sorted(s).alias("span_hashes"),
+            "bucket",
+            "part",
+            span_text_volume_from_sorted(s).cast("double").alias("text_len"),
+            # span-rule inputs ride the same scan (sorted-order indexes):
+            # a handful of (idx, ref) pairs + an almost-always-empty int
+            # array per doc — the cached frame stays body-free
+            media_spans_col(s).alias("media_spans"),
+            null_text_idxs_col(s).alias("null_text_idxs"),
+        )
+        .withColumn(
+            "v_hash", span_sequence_hash_from_hashes(F.col("span_hashes"))
+        )
     )

@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.digest import (
     DEFAULT_NUM_BUCKETS,
-    bucket_signatures,
     doc_digests,
     row_digests,
+    signature_fold,
 )
 
 #: classification labels — the reference's CheckDiffResult key sets
@@ -67,14 +67,14 @@ def classify_diff(
     ONLY by null-vs-'' hashes equal — but such docs also fold to equal
     ``v_hash`` and never enter the update set, so the body and hash
     formulations agree on every row that reaches this locator
-    (cross-checked in tests/test_diff.py)."""
+    (cross-checked against tests/oracle.first_divergence)."""
     carry = carry_cols or []
     if locate_spans and not (
         "span_hashes" in src_digest.columns and "span_hashes" in sink_digest.columns
     ):
         raise ValueError(
             "locate_spans=True needs a span_hashes array on both digest "
-            "frames (plans.runner._enriched_digests builds it); plain "
+            "frames (digest._enriched_digests builds it); plain "
             "row digests diff with locate_spans=False"
         )
     extra = ["span_hashes"] if locate_spans else []
@@ -133,8 +133,8 @@ def classify_diff(
 
 
 def mismatched_buckets(src_digest: DataFrame, sink_digest: DataFrame) -> DataFrame:
-    """Digest-level pruning (J3): bucket ids whose XOR signature or row
-    count differs between sides.
+    """Digest-level pruning (J3): bucket ids whose signature
+    (digest.signature_fold) or row count differs between sides.
 
     Single-exchange formulation: instead of aggregating each side and
     full-outer-joining the signature frames (3 sequential exchanges),
@@ -143,14 +143,16 @@ def mismatched_buckets(src_digest: DataFrame, sink_digest: DataFrame) -> DataFra
     missing on one side fall out naturally (count 0 ≠ count n), which
     subsumes the reference's empty-bucket alignment
     (DataCheckRunnable.java:221-233)."""
-    tagged = src_digest.select("bucket", "v_hash", F.lit(0).alias("side")).unionAll(
-        sink_digest.select("bucket", "v_hash", F.lit(1).alias("side"))
+    cols = ["bucket", "k_hash", "v_hash"]
+    tagged = src_digest.select(*cols, F.lit(0).alias("side")).unionAll(
+        sink_digest.select(*cols, F.lit(1).alias("side"))
     )
+    src, sink = F.col("side") == 0, F.col("side") == 1
     per_bucket = tagged.groupBy("bucket").agg(
-        F.expr("bit_xor(CASE WHEN side = 0 THEN v_hash END)").alias("src_sig"),
-        F.expr("bit_xor(CASE WHEN side = 1 THEN v_hash END)").alias("sink_sig"),
-        F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("src_n"),
-        F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).alias("sink_n"),
+        signature_fold(src).alias("src_sig"),
+        signature_fold(sink).alias("sink_sig"),
+        F.sum(F.when(src, 1).otherwise(0)).alias("src_n"),
+        F.sum(F.when(sink, 1).otherwise(0)).alias("sink_n"),
     )
     return per_bucket.filter(
         F.col("src_sig").isNull()
@@ -213,69 +215,3 @@ def diff_docs(
         two_phase=two_phase,
     )
 
-
-def first_divergent_span(
-    src_docs: DataFrame,
-    sink_docs: DataFrame,
-    updated_keys: DataFrame | None,
-    doc_id_col: str = "doc_id",
-    spans_col: str = "spans",
-) -> DataFrame:
-    """For ``update`` diffs, locate the offending span: the first index
-    where the two canonical span sequences diverge (or the shorter
-    length if one is a prefix).  Analogue of the reference's
-    Difference.idx CSV row locator (.../entry/check/Difference.java:27-33),
-    refined to span granularity per the north rule (violation rows =
-    doc_id + constraint + span index).
-
-    ``updated_keys=None`` means the inputs are ALREADY restricted to
-    the updated keys (the runner pushes an IN-list filter into the
-    scans so parquet row-group pruning applies); otherwise a broadcast
-    semi-join restricts them here.
-
-    Pure Catalyst: zip_with over the two sorted span arrays, then the
-    first false position — no Python.
-    """
-    from opengauss_tools_datachecker_performance_spark.digest import _sorted_spans
-
-    s = src_docs.select(
-        F.col(doc_id_col).cast("string").alias("key"),
-        _sorted_spans(F.col(spans_col)).alias("src_spans"),
-    )
-    t = sink_docs.select(
-        F.col(doc_id_col).cast("string").alias("key"),
-        _sorted_spans(F.col(spans_col)).alias("sink_spans"),
-    )
-    if updated_keys is not None:
-        s = s.join(updated_keys.select("key"), "key", "left_semi")
-        t = t.join(updated_keys.select("key"), "key", "left_semi")
-    j = s.join(t, "key", "inner")
-
-    def _feq(a, b):
-        # the digest frames every field with null coalesced to ''
-        # (HashHandler.java:58 quirk, digest._framed) — the body
-        # locator MUST compare under the same equivalence or it
-        # reports a span the engine defines as equal (a null-vs-''
-        # field) instead of the first hash-divergent one
-        return F.coalesce(a, F.lit("")) == F.coalesce(b, F.lit(""))
-
-    eq = F.zip_with(
-        F.col("src_spans"),
-        F.col("sink_spans"),
-        lambda a, b: (
-            _feq(a["kind"], b["kind"])
-            & _feq(a["text"], b["text"])
-            & _feq(a["media_ref"], b["media_ref"])
-        ).cast("int"),
-    )
-    # zip_with pads the shorter array with null structs; a padded
-    # element's fields coalesce to '' and compare unequal to any
-    # non-empty field, so extra spans read as mismatches, and a
-    # length-only divergence falls through to the shorter length.
-    first_bad = F.array_position(eq, F.lit(0)).cast("int")
-    return j.select(
-        "key",
-        F.when(first_bad > 0, first_bad - 1)
-        .otherwise(F.least(F.size("src_spans"), F.size("sink_spans")))
-        .alias("span_idx"),
-    )

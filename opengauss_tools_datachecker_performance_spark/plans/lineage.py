@@ -6,7 +6,12 @@ datachecker-check/.../cache/TableStatusRegister.java, SliceVo.java:68-70)
 checkpoint table (Iceberg stand-in) with one row per completed
 partition:
 
-    (run_id, part, n_rows, digest, status, wall_ts)
+    (run_id, part, n_rows, digest, status, wall_ts, fold)
+
+``digest`` is digest.signature_fold over the partition's rows and
+``fold`` the version of that fold (digest.FOLD_VERSION); a row of
+another version (NULL: written before the column existed) still counts
+as done for resume, but its digest is not comparable with a fresh one.
 
 Resume = read the ledger, take parts with status='done', anti-join
 them from the partition universe, and validate only the remainder —
@@ -22,7 +27,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_LEDGER_SCHEMA = "run_id string, part int, n_rows long, digest long, status string, wall_ts double"
+from opengauss_tools_datachecker_performance_spark.digest import (
+    FOLD_VERSION,
+    _enriched_digests,
+    signature_fold,
+)
+
+_LEDGER_SCHEMA = (
+    "run_id string, part int, n_rows long, digest long, status string, "
+    "wall_ts double, fold int"
+)
 
 
 def ledger_path(checkpoint_dir: str) -> str:
@@ -88,33 +102,23 @@ def record_partitions(
         F.col("digest").cast("long"),
         F.lit("done").alias("status"),
         F.lit(now).alias("wall_ts"),
+        F.lit(FOLD_VERSION).alias("fold"),
     )
     out.write.mode("append").parquet(ledger_path(checkpoint_dir))
 
 
 def partition_stats(docs: DataFrame, partition_col: str = "part") -> DataFrame:
-    """(part, n_rows, digest): XOR fold of span-sequence digests per
-    partition — the lineage digest the ledger stores (snapshot-id
-    analogue in a real Iceberg deployment).
+    """(part, n_rows, digest): digest.signature_fold per partition —
+    the lineage digest the ledger stores (snapshot-id analogue in a
+    real Iceberg deployment).
 
-    Digest-companion inputs (or validate's enriched digest frames)
-    fold their stored ``v_hash`` directly — no body scan, so the
-    ledger write and the companion staleness check both stay
-    metadata-sized."""
-    if "v_hash" in docs.columns and "spans" not in docs.columns:
-        keyed = docs.select(
-            F.col(partition_col).alias("part"), F.col("v_hash")
-        )
-    else:
-        from opengauss_tools_datachecker_performance_spark.digest import (
-            span_sequence_hash_col,
-        )
-
-        keyed = docs.select(
-            F.col(partition_col).alias("part"),
-            span_sequence_hash_col(F.col("spans")).alias("v_hash"),
-        )
-    return keyed.groupBy("part").agg(
+    Raw docs go through the doc-digest projection
+    (digest._enriched_digests); digest-companion inputs (or validate's
+    enriched digest frames) pass through it and fold their stored
+    ``v_hash`` — no body scan, so the ledger write and the companion
+    staleness check both stay metadata-sized."""
+    dig = _enriched_digests(docs.withColumnRenamed(partition_col, "part"))
+    return dig.groupBy("part").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.expr("bit_xor(v_hash)").alias("digest"),
+        signature_fold().alias("digest"),
     )

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from opengauss_tools_datachecker_performance_spark.plans.runner import ValidationResult
+from opengauss_tools_datachecker_performance_spark.plans.runner import (
+    ValidationResult,
+    partition_order,
+)
 
 MAX_DISPLAY_SIZE = 100  # CheckResultConstants.java:34
 
@@ -94,7 +97,7 @@ def summarize_dir(
         if r["status"] == "fail":
             c["failed_partitions"].append(r["part"])
     for c in by_constraint.values():
-        c["failed_partitions"].sort()
+        c["failed_partitions"].sort(key=partition_order)
 
     # first ≤100 keys per (constraint, detail) category, key-ordered.
     # Two-phase top-k: a single window over (constraint, detail) sorts
@@ -159,8 +162,11 @@ def summarize_dir(
     with open(os.path.join(out_dir, "summary.json"), "w") as f:
         json.dump(summary, f, indent=2, sort_keys=True)
     # success.log / failed.log analogues
-    failed = sorted({r["part"] for r in verdict_rows if r["status"] == "fail"})
-    passed = sorted({r["part"] for r in verdict_rows} - set(failed))
+    failed = sorted(
+        {r["part"] for r in verdict_rows if r["status"] == "fail"},
+        key=partition_order,
+    )
+    passed = sorted({r["part"] for r in verdict_rows} - set(failed), key=partition_order)
     with open(os.path.join(out_dir, "success.log"), "w") as f:
         f.writelines(f"partition {p}: pass\n" for p in passed)
     with open(os.path.join(out_dir, "failed.log"), "w") as f:

@@ -38,8 +38,12 @@ from opengauss_tools_datachecker_performance_spark.checks.span_rules import (
 from opengauss_tools_datachecker_performance_spark.checks.uniqueness import (
     duplicate_keys_from_digests,
 )
-from opengauss_tools_datachecker_performance_spark.digest import bucket_of
-from opengauss_tools_datachecker_performance_spark.functions.hashing import k_hash
+from opengauss_tools_datachecker_performance_spark.digest import (
+    ENRICHED_COLS,
+    _enriched_digests,
+    enriched_schema,
+    is_enriched,
+)
 from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
 )
@@ -65,9 +69,14 @@ def _empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], _VIOLATION_SCHEMA)
 
 
+def partition_order(p) -> tuple:
+    """Sort key for partition values with NULL among them (NULL last)."""
+    return (p is None, p)
+
+
 def _partition_stats(dig: DataFrame) -> list[tuple]:
     """(part, n_rows, digest) per partition of a digest frame, collected
-    (the lineage digest folds the frame's stored ``v_hash``)."""
+    (the lineage digest folds the frame's stored hashes)."""
     return [tuple(r) for r in partition_stats(dig).collect()]
 
 
@@ -90,106 +99,6 @@ def drift_verdicts(drift: DataFrame) -> DataFrame:
         F.lit("drift").alias("constraint"),
         F.col("drifted").cast("int").cast("long").alias("n_violations"),
         F.when(F.col("drifted"), "fail").otherwise("pass").alias("status"),
-    )
-
-
-#: the digest-companion contract: a table carrying exactly what the
-#: checks consume lets validation skip the doc-body scan entirely —
-#: ~8 B/span of hashes instead of the text bytes (the measured
-#: memory-bandwidth ceiling of the digest stage). Produced at ingest
-#: by sources.prehashed.write_digest_companion.
-ENRICHED_COLS = [
-    "key",
-    "k_hash",
-    "span_hashes",
-    "bucket",
-    "part",
-    "text_len",
-    "media_spans",
-    "null_text_idxs",
-    "v_hash",
-]
-
-
-def is_enriched(df: DataFrame) -> bool:
-    """True if ``df`` already carries the full digest-companion
-    contract (ENRICHED_COLS) — validate_docs then runs every check
-    off it without ever reading doc bodies."""
-    return set(ENRICHED_COLS) <= set(df.columns)
-
-
-def enriched_schema(spark: SparkSession) -> T.StructType:
-    """The companion contract's exact types, derived from the docs
-    schema through the real projection (never hand-maintained)."""
-    empty = spark.createDataFrame([], DOCS_SCHEMA).withColumn(
-        "part", F.lit(0)
-    )
-    return _enriched_digests(empty).schema
-
-
-def _enriched_digests(docs: DataFrame) -> DataFrame:
-    """One projection of the scan carrying everything the cheap checks
-    need: span-sequence digest + k_hash (diff, uniqueness), partition,
-    and the drift metric — so diff, uniqueness, drift, the partition
-    universe and lineage all run off this one persisted frame without
-    re-reading doc bodies.
-
-    The spans sort ONCE into a materialized attribute; the digest is
-    the per-span multi-arg xxhash64 fold (boundary-safe without
-    building a rendered string — digest.span_sequence_hash_from_hashes
-    has the measured numbers) and the drift metric is the byte volume
-    of the same sorted spans (monotone in text volume, which is
-    exactly what the distribution-drift check needs).
-
-    Digest-companion fast path: input that already carries the full
-    ENRICHED_COLS contract (written at ingest by
-    sources.prehashed.write_digest_companion) passes through with a
-    column-pruning projection — no body scan, no hashing."""
-    if is_enriched(docs):
-        return docs.select(*ENRICHED_COLS)
-    from opengauss_tools_datachecker_performance_spark.digest import (
-        _sorted_spans,
-        media_spans_col,
-        null_text_idxs_col,
-        span_hashes_from_sorted,
-        span_sequence_hash_from_hashes,
-        span_text_volume_from_sorted,
-    )
-
-    key = F.col("doc_id").cast("string")
-    kh = k_hash(key)
-    s = F.col("_s")
-    return (
-        docs.select(
-            key.alias("key"),
-            kh.alias("k_hash"),
-            _sorted_spans(F.col("spans")).alias("_s"),
-            bucket_of(kh).alias("bucket"),
-            F.col("part"),
-        )
-        .select(
-            "key",
-            "k_hash",
-            # per-span hash array materializes as its own attribute so
-            # the v_hash fold below reads it instead of re-hashing
-            # (Spark does NO cross-expression CSE) — and so the diff
-            # join can locate the first divergent span from the cache
-            # (classify_diff(locate_spans=True)) without ever
-            # re-reading doc bodies. ~8 B × spans/doc of extra cache —
-            # still an order of magnitude under the bodies.
-            span_hashes_from_sorted(s).alias("span_hashes"),
-            "bucket",
-            "part",
-            span_text_volume_from_sorted(s).cast("double").alias("text_len"),
-            # span-rule inputs ride the same scan (sorted-order indexes):
-            # a handful of (idx, ref) pairs + an almost-always-empty int
-            # array per doc — the cached frame stays body-free
-            media_spans_col(s).alias("media_spans"),
-            null_text_idxs_col(s).alias("null_text_idxs"),
-        )
-        .withColumn(
-            "v_hash", span_sequence_hash_from_hashes(F.col("span_hashes"))
-        )
     )
 
 
@@ -327,7 +236,7 @@ def validate_docs(
         sink_stats = sink_stats.result() if sink_stats is not None else []
     parts_all = sorted(
         {r[0] for r in src_stats} | {r[0] for r in sink_stats},
-        key=lambda p: (p is None, p),
+        key=partition_order,
     )
 
     pieces: list[DataFrame] = []

@@ -2,14 +2,15 @@
 
 The digest stage is the memory-bandwidth ceiling of the whole engine:
 at 3M heavy docs/side the parquet nested-span decode (text bytes)
-dominates the scan, and hashing itself is measured cheap
-(scripts/bench_digest_variants.py). At 10^12 docs the same ratio
-holds — every validation run re-reads ~KB of span text per doc to
+dominates the scan — the body-free companion layout validates 462,789
+docs/s against the raw layout's 214,773 on the same build
+(BENCH/BASELINE.md, round-5 spot; BENCH/scaling_companion.md). At
+10^12 docs the same ratio holds — every validation run re-reads ~KB of span text per doc to
 recompute ~40 B of digests.
 
 A digest COMPANION table inverts that cost: at ingest (when the
 writer has the doc bodies in memory anyway) it persists exactly the
-enriched digest frame the checks consume (plans.runner.ENRICHED_COLS:
+enriched digest frame the checks consume (digest.ENRICHED_COLS:
 per-span hash array, span-sequence digest, k_hash, bucket, drift
 metric, span-rule inputs). Validation then scans tens of bytes per
 doc instead of the bodies — a 10-100x scan-volume cut that converts
@@ -40,14 +41,12 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from opengauss_tools_datachecker_performance_spark.digest import _enriched_digests
+
 
 def digest_companion_frame(docs: DataFrame, partition_col: str = "part") -> DataFrame:
     """The exact enriched digest frame validate_docs builds internally
-    (plans.runner._enriched_digests), as a writable projection."""
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
-        _enriched_digests,
-    )
-
+    (digest._enriched_digests), as a writable projection."""
     return _enriched_digests(docs.withColumnRenamed(partition_col, "part"))
 
 
@@ -312,7 +311,7 @@ def companion_stale_partitions(
     """Body-free staleness check for the derived companion state:
     → (part, reason, companion_n_rows, reference_n_rows,
     companion_digest, reference_digest), one row per partition whose
-    companion (row count, XOR span-sequence digest) disagrees with
+    companion (row count, digest.signature_fold) disagrees with
     ``reference_stats`` — either ``plans.lineage.partition_stats``
     computed fresh off the doc table, or the ledger's recorded rows
     (``read_ledger(...).filter(status='done')`` reduced to the latest

@@ -3,9 +3,8 @@
 import pyspark.sql.functions as F
 
 from opengauss_tools_datachecker_performance_spark.checks.drift import (
-    doc_text_length,
-    drift_by_quantiles,
-    drift_by_tdigest,
+    drift_from_profiles,
+    quantile_profiles,
 )
 from opengauss_tools_datachecker_performance_spark.checks.referential import (
     dangling_media_refs,
@@ -22,6 +21,7 @@ from opengauss_tools_datachecker_performance_spark.checks.stats import (
 from opengauss_tools_datachecker_performance_spark.checks.uniqueness import (
     duplicate_keys,
 )
+from opengauss_tools_datachecker_performance_spark.digest import _enriched_digests
 
 
 def test_uniqueness_matches_planted(corpus, expected_by_class):
@@ -57,11 +57,15 @@ def test_null_text_matches_planted(corpus, expected_by_class):
 
 
 def test_drift_flags_only_partition_zero(corpus):
-    m = doc_text_length(corpus["docs_source"])
-    for fn in (drift_by_quantiles, drift_by_tdigest):
-        flags = {r["part"]: r["drifted"] for r in fn(m).collect()}
-        assert flags[0] is True
-        assert all(not v for p, v in flags.items() if p != 0), f"{fn.__name__}: {flags}"
+    m = _enriched_digests(corpus["docs_source"]).select(
+        "part", F.col("text_len").alias("metric")
+    )
+    flags = {
+        r["part"]: r["drifted"]
+        for r in drift_from_profiles(quantile_profiles(m)).collect()
+    }
+    assert flags[0] is True
+    assert all(not v for p, v in flags.items() if p != 0), flags
 
 
 def test_schema_check_pass_and_fail(spark, corpus):

@@ -192,6 +192,35 @@ def test_cli_sink_only_partition_is_validated(spark, tmp_path):
     assert 3 in parts
 
 
+def test_cli_null_partition_is_reported(spark, tmp_path):
+    """A NULL partition value on both sides: a --checkpoint-dir run
+    (a plain run's report path plus the ledger write) finishes with a
+    verdict, and summary.json lists the NULL partition among the
+    failed ones."""
+    from pyspark.sql import functions as F
+
+    corpus = str(tmp_path / "corpus")
+    write_corpus(spark, corpus, n_docs=400, n_assets=40, n_partitions=4)
+    sides = {}
+    for side in ("docs_source", "docs_sink"):
+        sides[side] = str(tmp_path / f"{side}_null.parquet")
+        spark.read.parquet(f"{corpus}/{side}.parquet").withColumn(
+            "part", F.when(F.col("part") != 2, F.col("part"))
+        ).write.partitionBy("part").parquet(sides[side])
+    report = str(tmp_path / "report")
+    args = [
+        "--source", sides["docs_source"],
+        "--sink", sides["docs_sink"],
+        "--assets", f"{corpus}/assets.parquet",
+        "--report-dir", report,
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+    ]
+    assert main(args, spark=spark) == 1
+    summary = json.load(open(os.path.join(report, "summary.json")))
+    failed = summary["constraints"]["consistency"]["failed_partitions"]
+    assert failed[-1] is None and None not in failed[:-1]
+
+
 def test_cli_kill_and_resume(tmp_path):
     """Real kill -9 mid-run: the resumed process must finish ONLY the
     pending waves and the merged report must equal a clean run's."""

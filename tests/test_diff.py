@@ -6,7 +6,6 @@ from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
     diff_docs,
     diff_tables,
-    first_divergent_span,
 )
 from tests.oracle import classify, collect_docs, first_divergence
 
@@ -42,22 +41,6 @@ def test_diff_matches_planted_classes(corpus, expected_by_class):
     )
 
 
-def test_first_divergent_span_matches_oracle(corpus):
-    diffs = diff_docs(corpus["docs_source"], corpus["docs_sink"])
-    upd = diffs.filter(F.col("diff_type") == "update").select("key")
-    got = {
-        r["key"]: r["span_idx"]
-        for r in first_divergent_span(corpus["docs_source"], corpus["docs_sink"], upd).collect()
-    }
-    src = collect_docs(corpus["docs_source"])
-    sink = collect_docs(corpus["docs_sink"])
-    want = {
-        k: first_divergence(src[k], sink[k])
-        for k in classify(src, sink)["update"]
-    }
-    assert got == want
-
-
 def test_flat_table_diff(spark):
     src = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id int, s string, v double"
@@ -76,8 +59,8 @@ def test_identical_tables_no_diff(corpus):
 def test_locate_spans_in_join_matches_body_formulation(corpus):
     """classify_diff(locate_spans=True) — the runner's zero-re-scan
     span locator over digest-frame hash arrays — must agree with the
-    body-comparing first_divergent_span on every update key."""
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
+    oracle's body comparison (first_divergence) on every update key."""
+    from opengauss_tools_datachecker_performance_spark.digest import (
         _enriched_digests,
     )
 
@@ -90,12 +73,11 @@ def test_locate_spans_in_join_matches_body_formulation(corpus):
         r["key"]: r["span_idx"]
         for r in diffs.filter(F.col("diff_type") == "update").collect()
     }
-    upd = diffs.filter(F.col("diff_type") == "update").select("key")
+    src = collect_docs(corpus["docs_source"])
+    sink = collect_docs(corpus["docs_sink"])
     want = {
-        r["key"]: r["span_idx"]
-        for r in first_divergent_span(
-            corpus["docs_source"], corpus["docs_sink"], upd
-        ).collect()
+        k: first_divergence(src[k], sink[k])
+        for k in classify(src, sink)["update"]
     }
     assert got == want and len(got) > 0
     # non-update rows carry no span index

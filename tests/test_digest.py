@@ -13,7 +13,6 @@ from opengauss_tools_datachecker_performance_spark.digest import (
     bucket_signatures,
     doc_digests,
     span_sequence_canonical_col,
-    table_digest,
 )
 
 DOCS_SCHEMA = (
@@ -81,13 +80,6 @@ def test_bucket_signature_row_order_invariant(spark, corpus):
     digests_b = doc_digests(corpus["docs_source"].repartition(17, F.col("doc_id")))
     sigs_b = {r["bucket"]: (r["sig"], r["n_rows"]) for r in bucket_signatures(digests_b).collect()}
     assert sigs_a == sigs_b
-
-
-def test_table_digest_stable(spark, corpus):
-    d = doc_digests(corpus["docs_source"])
-    t1 = table_digest(bucket_signatures(d)).collect()[0]
-    t2 = table_digest(bucket_signatures(doc_digests(corpus["docs_source"].orderBy(F.rand(7))))).collect()[0]
-    assert (t1["sig"], t1["n_rows"]) == (t2["sig"], t2["n_rows"])
 
 
 def test_canonical_matches_python_oracle(spark):

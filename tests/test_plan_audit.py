@@ -13,12 +13,11 @@ from opengauss_tools_datachecker_performance_spark.entry_queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
-#: documented Arrow-batched paths (multimodal decode, t-digest UDAF,
-#: binary-Avro codec — no spark-avro jar in the pip distro — and the
-#: BLAS gemm top-k, whose whole point is the Arrow batch boundary)
+#: documented Arrow-batched paths (multimodal decode, binary-Avro
+#: codec — no spark-avro jar in the pip distro — and the BLAS gemm
+#: top-k, whose whole point is the Arrow batch boundary)
 ALLOW_ARROW = {
     "multimodal_features",
-    "drift_tdigest",
     "frame_sample_plan",
     "debezium_avro_binary",
     "cosine_topk_fast",
@@ -41,6 +40,9 @@ ALLOW_BNLJ = {
     "cosine_topk",
     "ann_ivf",
     "drift_quantile_profile",
+    # checks.drift.drift_from_profiles: the same ONE-row baseline
+    # broadcast into the per-partition profile frame
+    "drift_tdigest",
     "embedding_near_dup_ivf",
     "lm_surprisal",
     "tfidf_top_terms",

@@ -95,7 +95,7 @@ def test_span_rules_from_digest_cache_match_explode_path(corpus):
     from opengauss_tools_datachecker_performance_spark.checks.span_rules import (
         span_rule_violations_from_digests,
     )
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
+    from opengauss_tools_datachecker_performance_spark.digest import (
         _enriched_digests,
     )
 

@@ -6,10 +6,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from opengauss_tools_datachecker_performance_spark.plans.runner import (
-    ENRICHED_COLS,
-    validate_docs,
-)
+from opengauss_tools_datachecker_performance_spark.digest import ENRICHED_COLS
+from opengauss_tools_datachecker_performance_spark.plans.runner import validate_docs
 from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
     read_digest_companion,
     write_digest_companion,
@@ -505,7 +503,7 @@ def test_bucketed_companion_diff_has_no_key_exchange(spark, tmp_path):
     from opengauss_tools_datachecker_performance_spark.operators.diff import (
         classify_diff,
     )
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
+    from opengauss_tools_datachecker_performance_spark.digest import (
         _enriched_digests,
     )
 

@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from opengauss_tools_datachecker_performance_spark.operators.diff import diff_docs
-from tests.oracle import canon_spans, classify
+from tests.oracle import canon_spans, classify, first_divergence
 
 DOC_SCHEMA = (
     "doc_id string, "
@@ -114,17 +114,16 @@ def _group(rows):
 @given(pair=corpus_pair())
 def test_locate_spans_matches_body_locator_on_random_corpora(spark, pair):
     """The in-join span locator (digest-frame hash arrays,
-    classify_diff(locate_spans=True)) must agree with the
-    body-comparing first_divergent_span on ARBITRARY mutations —
+    classify_diff(locate_spans=True)) must agree with the oracle's
+    body comparison (first_divergence) on ARBITRARY mutations —
     text/kind/offset edits, added/dropped spans, null text."""
     import pyspark.sql.functions as F
 
+    from opengauss_tools_datachecker_performance_spark.digest import (
+        _enriched_digests,
+    )
     from opengauss_tools_datachecker_performance_spark.operators.diff import (
         diff_digests,
-        first_divergent_span,
-    )
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
-        _enriched_digests,
     )
 
     src, sink = pair
@@ -141,12 +140,60 @@ def test_locate_spans_matches_body_locator_on_random_corpora(spark, pair):
         r["key"]: r["span_idx"]
         for r in diffs.filter(F.col("diff_type") == "update").collect()
     }
-    upd = spark.createDataFrame([(k,) for k in got] or [("__none__",)], "key string")
-    want = {
-        r["key"]: r["span_idx"]
-        for r in first_divergent_span(sdf, tdf, upd).collect()
-    }
+    cs = {k: canon_spans(v) for k, v in src.items()}
+    ct = {k: canon_spans(v) for k, v in sink.items()}
+    want = {k: first_divergence(cs[k], ct[k]) for k in classify(cs, ct)["update"]}
     assert got == want, (src, sink)
+
+
+@st.composite
+def permuted_pair(draw):
+    """Sink = source with its contents permuted among the keys (swaps,
+    cycles), and optionally two equal-content docs rewritten the same
+    way — moves that leave a key-free XOR of the contents unchanged."""
+    n = draw(st.integers(2, 8))
+    contents = [_spans(draw, draw(st.integers(1, 3))) for _ in range(n)]
+    twin = draw(st.booleans())
+    if twin:
+        contents[1] = [dict(s) for s in contents[0]]
+    perm = draw(st.permutations(range(n)))
+    src = {f"d{i}": contents[i] for i in range(n)}
+    sink = {f"d{i}": [dict(s) for s in contents[j]] for i, j in enumerate(perm)}
+    if twin:
+        new = _spans(draw, draw(st.integers(1, 3)))
+        sink["d0"], sink["d1"] = new, [dict(s) for s in new]
+    return src, sink
+
+
+@pytest.mark.parametrize("num_buckets", [1, 4])
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(pair=permuted_pair())
+def test_two_phase_diff_catches_permuted_contents(spark, num_buckets, pair):
+    """Contents moved between keys are updates: the two-phase prune's
+    bucket signature binds each row hash to its key."""
+    from opengauss_tools_datachecker_performance_spark.digest import doc_digests
+    from opengauss_tools_datachecker_performance_spark.operators.diff import (
+        diff_digests,
+    )
+
+    src, sink = pair
+    got = _group(
+        diff_digests(
+            doc_digests(_df(spark, src), num_buckets=num_buckets),
+            doc_digests(_df(spark, sink), num_buckets=num_buckets),
+            two_phase=True,
+        ).collect()
+    )
+    want = classify(
+        {k: canon_spans(v) for k, v in src.items()},
+        {k: canon_spans(v) for k, v in sink.items()},
+    )
+    for t in ("insert", "update", "delete"):
+        assert {r["key"] for r in got.get(t, [])} == want[t], (t, src, sink)
 
 
 @settings(

@@ -45,7 +45,7 @@ def test_bucketed_docs_diff_without_shuffle(corpus, spark, tmp_path):
     from opengauss_tools_datachecker_performance_spark.operators.diff import (
         classify_diff,
     )
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
+    from opengauss_tools_datachecker_performance_spark.digest import (
         _enriched_digests,
     )
     from opengauss_tools_datachecker_performance_spark.sources.bucketed import (
