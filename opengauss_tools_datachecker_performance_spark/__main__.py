@@ -41,11 +41,16 @@ plans/sections.py, one record each: flags, parse-time spec checks,
 owned report frames and a run function. ``main`` adds and checks them
 at parse time and runs them in the one tail every summary-writing
 exit reaches.
+
+Every frame a run caches lives in one cache scope (session.py) that
+``main`` opens around the run: a chunked run's waves and each report
+stage get a nested one, and a run that raises releases them too.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import glob
 import json
 import os
@@ -57,6 +62,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.plans.sections import SECTIONS
+from opengauss_tools_datachecker_performance_spark.session import cache_scope
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -467,7 +473,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
         spark = get_spark(app_name="datachecker-validate", master=args.master)
     try:
-        return _run(spark, args)
+        with cache_scope():
+            return _run(spark, args)
     finally:
         if own_session:
             spark.stop()
@@ -710,39 +717,44 @@ def _run(spark: SparkSession, args) -> int:
     for ch in chunks:
         # fast path: a full single wave needs no partition filter
         only = ch if chunked or ch != universe else None
-        result = validate_docs(
-            docs_source,
-            docs_sink,
-            assets,
-            partition_col=args.partition_col,
-            only_partitions=only,
-            drift_threshold=args.drift_threshold,
-            max_violations_per_partition=args.max_violations,
-            skip_drift=chunked,  # judged run-globally after the waves
-        )
-        write_frames(
-            result, args.report_dir, chunk=(min(ch) if chunked else None)
-        )
-        if args.emit_repair and result.extras.get("diffs") is not None:
-            from opengauss_tools_datachecker_performance_spark.plans.report import (
-                write_repair_sql,
+        # a single full wave's frames live in the run's scope: its
+        # cached digest frame covers the whole source, so the sections
+        # take it (a snapshot delta then never digests the source a
+        # second time); any other wave's frames go with the wave
+        with cache_scope() if only is not None else contextlib.nullcontext():
+            result = validate_docs(
+                docs_source,
+                docs_sink,
+                assets,
+                partition_col=args.partition_col,
+                only_partitions=only,
+                drift_threshold=args.drift_threshold,
+                max_violations_per_partition=args.max_violations,
+                skip_drift=chunked,  # judged run-globally after the waves
             )
-
-            write_repair_sql(
-                result.extras["diffs"],
-                args.report_dir,
-                source_table=args.source,
-                sink_table=args.sink,
-                batch_size=args.repair_batch_size,
-                chunk=(min(ch) if chunked else None),
+            write_frames(
+                result, args.report_dir, chunk=(min(ch) if chunked else None)
             )
-        if chunked and result.schema_ok:
-            result.extras["drift_profiles"].write.mode("overwrite").parquet(
-                os.path.join(
-                    args.report_dir, "drift_profiles.parquet", f"chunk={min(ch)}"
+            if args.emit_repair and result.extras.get("diffs") is not None:
+                from opengauss_tools_datachecker_performance_spark.plans.report import (
+                    write_repair_sql,
                 )
-            )
-            print(f"[wave] partitions {ch[0]}..{ch[-1]} written", flush=True)
+
+                write_repair_sql(
+                    result.extras["diffs"],
+                    args.report_dir,
+                    source_table=args.source,
+                    sink_table=args.sink,
+                    batch_size=args.repair_batch_size,
+                    chunk=(min(ch) if chunked else None),
+                )
+            if chunked and result.schema_ok:
+                result.extras["drift_profiles"].write.mode("overwrite").parquet(
+                    os.path.join(
+                        args.report_dir, "drift_profiles.parquet", f"chunk={min(ch)}"
+                    )
+                )
+                print(f"[wave] partitions {ch[0]}..{ch[-1]} written", flush=True)
         if not result.schema_ok:
             schema_ok, schema_msg = False, result.schema_message
             break
@@ -757,20 +769,8 @@ def _run(spark: SparkSession, args) -> int:
         )
         if args.checkpoint_dir:
             record_partitions(spark, args.checkpoint_dir, run_id, stats)
-        # a single full wave's persisted enriched digest frame covers
-        # the whole source: hand it to the sections (a snapshot delta
-        # then never digests the source a second time) and unpersist
-        # it after them
         if only is None:
             held_digests = result.extras.get("digests_source")
-        for df in (
-            result.extras.get("violations_full"),
-            None if only is None else result.extras.get("digests_source"),
-            result.extras.get("digests_sink"),
-            result.extras.get("diffs"),
-        ):
-            if df is not None:
-                df.unpersist()
 
     if chunked and schema_ok:
         _finalize_drift(spark, args.report_dir, args.drift_threshold)
@@ -814,9 +814,8 @@ def _finish(
                     os.path.join(glob.escape(args.report_dir), frame)
                 ):
                     shutil.rmtree(path, ignore_errors=True)
-        entries.update(sec.run(spark, args, ctx))
-    if ctx.get("source_digests") is not None:
-        ctx["source_digests"].unpersist()
+        with cache_scope():
+            entries.update(sec.run(spark, args, ctx))
     try:
         # a resumed run finalizes drift in case a kill landed between
         # the last wave and the drift rollup

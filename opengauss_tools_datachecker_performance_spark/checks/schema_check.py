@@ -17,7 +17,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -72,17 +71,6 @@ def check_schema(
         type_mismatches=types,
         order_mismatch=order,
     )
-
-
-def table_structure_hash(df: DataFrame) -> int:
-    """Structure-drift fingerprint: hash of the lowercased, sorted
-    name:type list — analogue of the reference's table-metadata hash
-    (DataManipulationService.queryTableMetadataHash:289-305)."""
-    desc = ",".join(
-        sorted(f"{f.name.lower()}:{f.dataType.simpleString()}" for f in df.schema.fields)
-    )
-    row = df.sparkSession.range(1).select(F.xxhash64(F.lit(desc)).alias("h")).head()
-    return row["h"]
 
 
 #: the north-rule docs schema (BASELINE.json input_hint)

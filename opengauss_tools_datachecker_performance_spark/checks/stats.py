@@ -1,4 +1,4 @@
-"""Per-column statistics + not-null / enum / regex column rules.
+"""Per-column statistics + the span-level null-text rule.
 
 The reference only carries rowCount/avgRowLength from
 information_schema (TableMetadata.java:55-63); full column profiling
@@ -43,31 +43,6 @@ def column_stats(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         F.explode(F.array(*[F.col(f"s_{f.name}") for f in fields])).alias("s")
     )
     return stacked.select("s.*")
-
-
-def not_null_violations(
-    df: DataFrame, col: Column, key: Column, constraint: str = "not_null"
-) -> DataFrame:
-    """Rows violating a NOT NULL rule → (key, constraint)."""
-    return df.filter(col.isNull()).select(
-        key.alias("key"), F.lit(constraint).alias("constraint")
-    )
-
-
-def enum_violations(
-    df: DataFrame, col: Column, allowed: list[str], key: Column, constraint: str = "enum"
-) -> DataFrame:
-    return df.filter(~col.isin(allowed) | col.isNull()).select(
-        key.alias("key"), F.lit(constraint).alias("constraint")
-    )
-
-
-def regex_violations(
-    df: DataFrame, col: Column, pattern: str, key: Column, constraint: str = "regex"
-) -> DataFrame:
-    return df.filter(~col.rlike(pattern)).select(
-        key.alias("key"), F.lit(constraint).alias("constraint")
-    )
 
 
 def span_null_text_violations(docs: DataFrame) -> DataFrame:

@@ -13,9 +13,6 @@ This is a new-engine check, designed for 10^12 keys:
   surviving sliver. Collision candidates drop out here, so the result
   is exact — unlike an HLL prescreen, which can mask a single dup
   inside a large partition's error bar.
-* an ``approx_count_distinct`` **prescreen** is still exposed for
-  monitoring (cheap table-level dup-rate estimate) but never gates
-  the exact result.
 """
 
 from __future__ import annotations
@@ -92,22 +89,3 @@ def duplicate_keys_from_digests(
         aggs.append(F.min("part").alias("part"))
     return narrowed.groupBy("key").agg(*aggs).filter(F.col("n_occurrences") > 1)
 
-
-def approx_duplicate_rate(df: DataFrame, key: Column) -> DataFrame:
-    """Monitoring-only HLL estimate: (n_rows, approx_distinct,
-    approx_dup_rate). Never used to gate the exact check."""
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.approx_count_distinct(key, 0.01).alias("approx_distinct"),
-    ).select(
-        "n_rows",
-        "approx_distinct",
-        (1 - F.col("approx_distinct") / F.col("n_rows")).alias("approx_dup_rate"),
-    )
-
-
-def uniqueness_violations(df: DataFrame, key: Column) -> DataFrame:
-    """→ (key, constraint='unique') violation rows."""
-    return duplicate_keys(df, key).select(
-        "key", F.lit("unique").alias("constraint")
-    )

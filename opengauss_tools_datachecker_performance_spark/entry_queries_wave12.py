@@ -67,12 +67,7 @@ def q_media_context_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_from_documents,
     )
 
-    # persist the derived fixture: fused with the doc-derivation CASE
-    # expression the audit stage falls out of whole-stage codegen and
-    # evaluates interpreted (~9x slower, measured 6.4s vs 0.7s at
-    # sf0.1). Real deployments read a materialized docs table, so the
-    # operator itself needs no cache — only this derived-fixture entry.
-    docs = docs_from_documents(_t(spark, sf_dir, "documents")).persist()
+    docs = docs_from_documents(_t(spark, sf_dir, "documents"))
     return media_context_audit(docs, min_words=8)
 
 
@@ -199,6 +194,7 @@ def _portable_digest_frame(docs: DataFrame) -> DataFrame:
     return docs.select(
         F.col("part").cast("int").alias("part"),
         F.pmod(kh, F.lit(_N_SNAP_BUCKETS)).cast("int").alias("bucket"),
+        kh.alias("k_hash"),
         portable_hash64(_plain_canon(F.col("spans"))).alias("v_hash"),
     )
 

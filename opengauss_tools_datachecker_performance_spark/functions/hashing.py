@@ -33,15 +33,6 @@ from pyspark.sql import functions as F
 #: read the same in reports.
 PK_DELIMITER = "_#_"
 
-#: NULL canonicalization inside digests: the reference substitutes ""
-#: for SQL NULL at hash time (HashHandler.java:58), so null and empty
-#: string collide *inside the digest* — a documented quirk we preserve
-#: (and test) for verdict parity. Columns additionally get a one-char
-#: type tag + unit separator so "ab","c" vs "a","bc" don't collide —
-#: an improvement over the reference's bare concat, allowed because we
-#: promise equality semantics, not bit equality.
-_SEP = ""  # ASCII unit separator; never appears in canonical strings
-
 
 def pk_key(*cols: Column | str) -> Column:
     """Composite primary key string: values joined by ``_#_``.
@@ -53,6 +44,9 @@ def pk_key(*cols: Column | str) -> Column:
 
 
 def _null_safe(c: Column) -> Column:
+    """SQL NULL canonicalizes to "" as in the reference
+    (HashHandler.java:58): null and empty string collide inside the
+    digest, a quirk kept (and tested) for verdict parity."""
     return F.coalesce(c.cast("string"), F.lit(""))
 
 
@@ -71,12 +65,6 @@ def v_hash(*canonical_cols: Column) -> Column:
     reference's null=='' digest quirk deterministically.
     """
     return F.xxhash64(*[_null_safe(c) for c in canonical_cols])
-
-
-def concat_canonical(*canonical_cols: Column) -> Column:
-    """Canonical whole-row string (separator-tagged). Used when the
-    row content itself (not just its hash) must cross engines."""
-    return F.concat_ws(_SEP, *[_null_safe(c) for c in canonical_cols])
 
 
 def portable_hash64(c: Column) -> Column:

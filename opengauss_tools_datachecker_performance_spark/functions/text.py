@@ -290,13 +290,6 @@ def shingle_rows(
     return out.dropDuplicates(["doc_id", "sh"]) if distinct else out
 
 
-def shingle_hashes(text: Column, k: int = 3) -> Column:
-    """Distinct portable-hash values of the k-word shingle set."""
-    return F.array_distinct(
-        F.transform(word_shingles(text, k), lambda s: portable_hash64(s))
-    )
-
-
 #: affine MinHash parameters: h_i = (a_i * (h mod 2^31) + b_i) mod P.
 #: Universal-hash family over ONE base hash per shingle instead of one
 #: seeded md5 per (shingle, seed) — the classic MinHash optimization

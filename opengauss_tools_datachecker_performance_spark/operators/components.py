@@ -22,9 +22,10 @@ neighborhood deflates geometrically). Converges in O(log n) rounds;
 near-dup clusters (small diameter) converge in 2-3.
 
 Scale notes (10^12 docs):
-* every round ends in ``localCheckpoint(eager=True)`` — iterative
-  DataFrame loops otherwise accumulate lineage until analysis cost
-  dominates; on a real cluster prefer
+* every round ends in an eager local checkpoint
+  (``session.checkpointed``, released with the caller's cache scope)
+  — iterative DataFrame loops otherwise accumulate lineage until
+  analysis cost dominates; on a real cluster prefer
   ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` for
   fault-tolerant truncation (localCheckpoint trades replay safety
   for speed, which is the right sandbox default).
@@ -45,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opengauss_tools_datachecker_performance_spark.session import checkpointed
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -102,24 +105,22 @@ def connected_components(
     Isolated documents never enter the pair graph, so they are not
     emitted (a dedup pipeline treats absent ids as singleton
     survivors)."""
-    e = (
+    e = checkpointed(
         edges.select(
             F.col(src).cast("string").alias("a"),
             F.col(dst).cast("string").alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = checkpointed(
         e.select(F.col("a").alias("id"))
         .union(e.select(F.col("b").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sig = _signature(e)
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e = checkpointed(_small_star(_large_star(e)))
         nxt = _signature(e)
         if nxt == sig:
             break

@@ -46,6 +46,7 @@ from opengauss_tools_datachecker_performance_spark.functions.text import (
     normalized_text,
     ws_tokens,
 )
+from opengauss_tools_datachecker_performance_spark.session import cached
 
 
 def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -189,7 +190,6 @@ def bigram_surprisal_scores(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    handles_out: dict | None = None,
 ) -> DataFrame:
     """→ (doc_id, n_bigrams, surprisal_bits, avg_bits): per-doc
     integer surprisal under the corpus's own add-one-smoothed bigram
@@ -209,19 +209,13 @@ def bigram_surprisal_scores(
 
     The per-(doc, bigram) count frame ``m`` both trains the model
     (bgc/hist derive from it) and is the scoring join's left side —
-    two consumers of one tokenize+window subtree. Pass ``handles_out``
-    (a dict) to persist ``m`` across them and receive the handle for
-    :func:`opengauss_tools_datachecker_performance_spark.operators.dedup.release`
-    after the result materializes; without it the subtree recomputes
-    (pure-lazy, nothing cached behind the caller's back)."""
-    m = (
+    two consumers of one tokenize+window subtree, so it is cached in
+    the caller's cache scope (outside one the subtree recomputes)."""
+    m = cached(
         bigram_rows(df, id_col, text_col)
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).cast("long").alias("_m"))
     )
-    if handles_out is not None:
-        m = m.persist()
-        handles_out.setdefault("persisted", []).append(m)
     bgc = m.groupBy("bigram").agg(F.sum("_m").alias("_c2"))
     hist = bgc.groupBy(
         F.substring_index("bigram", " ", 1).alias("_w1")

@@ -21,6 +21,10 @@ Four families, all shuffle-disciplined for the 100 TB case:
 
 Every emitted pair is canonicalized (id_a < id_b) and every hash that
 reaches the output is the portable md5-based hash (oracle parity).
+
+Frames an operator reads more than once are cached in the caller's
+cache scope (session.py), so they live until the caller's scope exits;
+called outside one, the operators stay lazy.
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from opengauss_tools_datachecker_performance_spark.operators.skew import small_side
+from opengauss_tools_datachecker_performance_spark.session import cached
 
 from opengauss_tools_datachecker_performance_spark.functions.hashing import (
     portable_hash64,
@@ -227,17 +232,7 @@ def coverage_counts(coverage: dict) -> dict:
     """Materialize the drop-accounting frames registered by the dedup
     operators into plain counts (one tiny action each) — pipeline runs
     put these in their report so coverage caps are never silent."""
-    return {
-        k: df.count() for k, df in coverage.items() if k != "persisted"
-    }
-
-
-def release(coverage: dict) -> None:
-    """Unpersist every frame an operator cached for its own reuse —
-    call after the verified result is materialized (long-lived sessions
-    otherwise accumulate cached partitions until storage evicts)."""
-    for df in coverage.pop("persisted", []):
-        df.unpersist()
+    return {k: df.count() for k, df in coverage.items()}
 
 
 def lsh_candidate_pairs(
@@ -284,7 +279,6 @@ def exact_jaccard(
     text_col: str,
     pairs: DataFrame,
     shingle_k: int = 3,
-    coverage_out: dict | None = None,
 ) -> DataFrame:
     """Verify candidate pairs with exact shingle-set Jaccard:
     → (id_a, id_b, jaccard), one row per input pair.
@@ -296,18 +290,16 @@ def exact_jaccard(
     they broadcast into the row index."""
     # verification only ever touches docs that appear in a candidate
     # pair — semi-join the shingle index down to those docs FIRST and
-    # persist the (tiny) remainder, so the full-corpus shingle build
+    # cache the (tiny) remainder, so the full-corpus shingle build
     # runs exactly once no matter how many joins read it below
     ids = pairs.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    rows = (
-        shingle_rows(df, id_col, text_col, shingle_k, distinct=True)
-        .join(small_side(ids), "doc_id", "left_semi")
-        .persist()
+    rows = cached(
+        shingle_rows(df, id_col, text_col, shingle_k, distinct=True).join(
+            small_side(ids), "doc_id", "left_semi"
+        )
     )
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(rows)
     return jaccard_for_pairs(rows, pairs)
 
 
@@ -363,20 +355,17 @@ def minhash_near_duplicates(
 
     The bucket frame feeds a self-join (both sides) and the candidate
     frame is referenced three times by the verification joins — both
-    are thin (4 longs/doc; a few rows per near-dup pair), so they
-    persist rather than re-running the signature subtree per consumer
+    are thin (4 longs/doc; a few rows per near-dup pair), so they are
+    cached rather than re-running the signature subtree per consumer
     (same cache-the-digests discipline as plans/runner.py). Pass
-    ``coverage_out`` (a dict) to receive the persisted handles for
-    :func:`release` after materialization plus the mega-bucket drop
+    ``coverage_out`` (a dict) to receive the mega-bucket drop
     accounting for :func:`coverage_counts` — pipeline runs surface
     those counts in their report so the cap is never silent."""
-    buckets = minhash_band_buckets(
-        df, id_col, text_col, shingle_k, num_hashes, bands
-    ).persist()
-    cands = lsh_candidate_pairs(buckets, max_bucket_size, coverage_out).persist()
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).extend([buckets, cands])
-    verified = exact_jaccard(df, id_col, text_col, cands, shingle_k, coverage_out)
+    buckets = cached(
+        minhash_band_buckets(df, id_col, text_col, shingle_k, num_hashes, bands)
+    )
+    cands = cached(lsh_candidate_pairs(buckets, max_bucket_size, coverage_out))
+    verified = exact_jaccard(df, id_col, text_col, cands, shingle_k)
     return verified.filter(F.col("jaccard") >= threshold)
 
 
@@ -490,11 +479,8 @@ def simhash_near_duplicates(
     scale a popular signature region becomes a bounded join, not a
     driver-sized array. ``max_bucket_size`` drops degenerate
     mega-buckets (all-identical boilerplate); the dropped entries
-    register in ``coverage_out`` (see :func:`coverage_counts`), which
-    also receives the persisted band frame for :func:`release`."""
-    bands_df = simhash_bands(df, id_col, text_col).persist()
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(bands_df)
+    register in ``coverage_out`` (see :func:`coverage_counts`)."""
+    bands_df = cached(simhash_bands(df, id_col, text_col))
     # all four bands in ONE keyed frame: a single group-size pass and a
     # single co-partitioned self-join on (band, key) replace four of
     # each — same candidate set, quarter the shuffle stages (the key
@@ -680,19 +666,14 @@ def embedding_near_duplicates(
         norm,
     )
 
-    # persist: the vector frame feeds the signature pass AND both
-    # re-score joins (same discipline as the MinHash/SimHash siblings);
-    # the handle registers in coverage_out['persisted'] for release()
-    v = (
+    # cached: the vector frame feeds the signature pass AND both
+    # re-score joins (same discipline as the MinHash/SimHash siblings)
+    v = cached(
         embeddings.select(
             F.col(id_col).cast("long").alias("vid"),
             F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("nrm", norm(F.col("vec")))
-        .persist()
+        ).withColumn("nrm", norm(F.col("vec")))
     )
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(v)
 
     # all tables in ONE keyed frame: a single group-size pass and one
     # co-partitioned self-join on (table, bucket) replace n_tables of
@@ -781,17 +762,13 @@ def embedding_near_duplicates_ivf(
         norm,
     )
 
-    # persist: v feeds the assignment pass and both re-score joins
-    v = (
+    # cached: v feeds the assignment pass and both re-score joins
+    v = cached(
         embeddings.select(
             F.col(id_col).cast("long").alias("vid"),
             F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("nrm", norm(F.col("vec")))
-        .persist()
+        ).withColumn("nrm", norm(F.col("vec")))
     )
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(v)
     cent = ivf_centroids(v, "vid", "vec", n_cells, quantize_scale)
     assigned = ivf_assign(
         v.select("vid", F.col("vec")).withColumn(
@@ -956,10 +933,7 @@ def source_overlap_matrix(
     bounded per-source size frame joins through
     :func:`operators.skew.small_side` (this module pins no
     broadcasts — plan-audit gate).  Output is at most one row per
-    co-occurring source pair.  Without ``coverage_out`` the matrix is
-    computed eagerly, so the cached (source, fp) frame is released
-    before return; with it, the frame is handed to the caller in
-    ``coverage_out['persisted']``."""
+    co-occurring source pair."""
     fps = (
         df.select(
             F.col(source_col).cast("string").alias("source"),
@@ -975,16 +949,12 @@ def source_overlap_matrix(
             .select("fp")
             .distinct()
         )
-    # persist: the (source, fp) frame feeds the size aggregate AND both
+    # cached: the (source, fp) frame feeds the size aggregate AND both
     # sides of the pair self-join — without it each consumer re-runs
     # the full corpus fingerprint scan (3 scans instead of 1 at 100 TB)
-    kept = (
-        sized.filter(F.col("_s_n") <= max_sources_per_fp)
-        .select("source", "fp")
-        .persist()
+    kept = cached(
+        sized.filter(F.col("_s_n") <= max_sources_per_fp).select("source", "fp")
     )
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(kept)
     sizes = kept.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -1000,7 +970,7 @@ def source_overlap_matrix(
     sb = small_side(sizes.withColumnsRenamed({"source": "source_b", "n": "n_b"}))
     ratio = lambda c: F.round(c, 6).cast("decimal(10,6)").cast("string")  # noqa: E731
     union_n = F.col("n_a") + F.col("n_b") - F.col("n_shared")
-    out = (
+    return (
         shared.join(sa, "source_a")
         .join(sb, "source_b")
         .select(
@@ -1014,10 +984,3 @@ def source_overlap_matrix(
             ratio(F.col("n_shared") / F.col("n_b")).alias("frac_b_in_a"),
         )
     )
-    if coverage_out is not None:
-        return out
-    # no ledger to release ``kept`` through: materialize the matrix (one
-    # row per co-occurring source pair) and release it here
-    matrix = out.toArrow()
-    kept.unpersist()
-    return df.sparkSession.createDataFrame(matrix)

@@ -42,6 +42,11 @@ Scale notes (10^12 docs):
 * ``update_minhash_index`` skips docs already indexed in OTHER
   batches (anti-join on the thin bucket table) and overwrites its own
   batch= subdirs, so replaying a failed batch is idempotent.
+
+Caching: ``update_minhash_index`` writes before it returns and
+releases its cached shingle pass itself; :func:`ingest_batch` and
+:func:`incremental_near_duplicates` return lazy pairs over cached
+frames, which live in the caller's cache scope (session.py).
 """
 
 from __future__ import annotations
@@ -57,6 +62,7 @@ from opengauss_tools_datachecker_performance_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_buckets_from_shingle_rows,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope, cached
 
 
 def minhash_index_frames(
@@ -73,7 +79,7 @@ def minhash_index_frames(
     internally, as writable projections.
 
     Both frames derive from ONE non-distinct ``(doc_id, sh)``
-    shingle-rows lineage; pass a PERSISTED ``rows`` (built with
+    shingle-rows lineage; pass a CACHED ``rows`` (built with
     ``shingle_rows(docs, ..., distinct=False)``) to make that one text
     scan literal — the writers below do, so indexing a batch
     tokenizes/shingles its text exactly once."""
@@ -181,6 +187,7 @@ def _without_indexed(
     )
 
 
+@cache_scope()
 def update_minhash_index(
     spark: SparkSession,
     path: str,
@@ -204,21 +211,17 @@ def update_minhash_index(
     fresh = _without_indexed(new_docs, others_b, id_col)
     # one cached shingle pass feeds both index frames (and the count:
     # every doc emits >=1 shingle row, empty text included)
-    rows = shingle_rows(fresh, id_col, text_col, shingle_k, distinct=False)
-    rows = rows.persist()
-    try:
-        n = rows.select("doc_id").distinct().count()
-        if n == 0:
-            # nothing new: remove a possibly-partial replayed subdir
-            _drop_batch_subdirs(rows.sparkSession, path, key)
-            return 0
-        b, s = minhash_index_frames(
-            fresh, id_col, text_col, shingle_k, num_hashes, bands, rows=rows
-        )
-        _overwrite_batch(b, os.path.join(path, "buckets.parquet"), key)
-        _overwrite_batch(s, os.path.join(path, "shingles.parquet"), key)
-    finally:
-        rows.unpersist()
+    rows = cached(shingle_rows(fresh, id_col, text_col, shingle_k, distinct=False))
+    n = rows.select("doc_id").distinct().count()
+    if n == 0:
+        # nothing new: remove a possibly-partial replayed subdir
+        _drop_batch_subdirs(rows.sparkSession, path, key)
+        return 0
+    b, s = minhash_index_frames(
+        fresh, id_col, text_col, shingle_k, num_hashes, bands, rows=rows
+    )
+    _overwrite_batch(b, os.path.join(path, "buckets.parquet"), key)
+    _overwrite_batch(s, os.path.join(path, "shingles.parquet"), key)
     return n
 
 
@@ -241,7 +244,7 @@ def ingest_batch(
     Running detection and :func:`update_minhash_index` back-to-back
     shingles/minhashes the batch twice — the dominant per-batch cost
     the index exists to eliminate. Here the batch's (buckets,
-    shingles) frames are computed once, persisted, written into the
+    shingles) frames are computed once, cached, written into the
     index's ``batch=`` subdirs, and the SAME cached frames feed
     detection against the other batches' stored state.
 
@@ -251,56 +254,37 @@ def ingest_batch(
     re-emits the batch's pairs (idempotent output, unlike the
     detect-then-update composition which emits nothing on replay).
 
-    The persisted frames are registered in ``coverage_out`` 's
-    ``persisted`` list (same release discipline as
-    ``incremental_near_duplicates``) — pass a dict and
-    :func:`~opengauss_tools_datachecker_performance_spark.operators.dedup.release`
-    it after materializing the pairs; with ``coverage_out=None`` the
-    cached detection frames stay pinned for the session (there is no
-    handle to release them by). On an error mid-ingest every frame persisted here is
-    released before the exception propagates (a long-lived session
-    must not accumulate cached partitions from failed ingests)."""
+    The cached frames live in the caller's cache scope, on an error
+    mid-ingest too."""
     key = _batch_key(new_docs, id_col)
     others_b, others_s = _read_others(spark, path, key)
     fresh = _without_indexed(new_docs, others_b, id_col)
     # ONE cached shingle pass feeds the index write AND detection
-    rows = shingle_rows(fresh, id_col, text_col, shingle_k, distinct=False)
-    persisted = [rows.persist()]
-    try:
-        b, s = minhash_index_frames(
-            fresh, id_col, text_col, shingle_k, num_hashes, bands, rows=rows
-        )
-        persisted.extend([b.persist(), s.persist()])
-        n = rows.select("doc_id").distinct().count()
-        if n == 0:
-            _drop_batch_subdirs(rows.sparkSession, path, key)
-        else:
-            _overwrite_batch(b, os.path.join(path, "buckets.parquet"), key)
-            _overwrite_batch(s, os.path.join(path, "shingles.parquet"), key)
-        pairs = incremental_near_duplicates(
-            others_b,
-            others_s,
-            fresh,
-            id_col,
-            text_col,
-            threshold,
-            shingle_k,
-            num_hashes,
-            bands,
-            max_bucket_size,
-            coverage_out,
-            _new_frames=(b, s),
-        )
-    except BaseException:
-        for df in persisted:
-            df.unpersist()
-        raise
-    # rows was the ingest-internal cache; the writes above already
-    # populated b/s's caches from it, so it can be released here while
-    # b/s stay cached for the caller's pairs materialization
-    rows.unpersist()
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).extend([b, s])
+    rows = cached(shingle_rows(fresh, id_col, text_col, shingle_k, distinct=False))
+    b, s = minhash_index_frames(
+        fresh, id_col, text_col, shingle_k, num_hashes, bands, rows=rows
+    )
+    b, s = cached(b), cached(s)
+    n = rows.select("doc_id").distinct().count()
+    if n == 0:
+        _drop_batch_subdirs(rows.sparkSession, path, key)
+    else:
+        _overwrite_batch(b, os.path.join(path, "buckets.parquet"), key)
+        _overwrite_batch(s, os.path.join(path, "shingles.parquet"), key)
+    pairs = incremental_near_duplicates(
+        others_b,
+        others_s,
+        fresh,
+        id_col,
+        text_col,
+        threshold,
+        shingle_k,
+        num_hashes,
+        bands,
+        max_bucket_size,
+        coverage_out,
+        _new_frames=(b, s),
+    )
     return pairs, n
 
 
@@ -324,7 +308,7 @@ def incremental_near_duplicates(
     (corpus ∪ batch) filtered to batch-involving pairs (tested).
 
     ``_new_frames`` lets :func:`ingest_batch` hand in the batch's
-    (buckets, shingles) frames it already computed (and persisted) so
+    (buckets, shingles) frames it already computed (and cached) so
     detection and index maintenance share ONE shingle/minhash pass;
     when given, ``new_docs`` must already exclude indexed ids."""
     if _new_frames is None:
@@ -347,20 +331,16 @@ def incremental_near_duplicates(
     # same candidate generation (and occupancy cap over the FULL
     # union) as the full-corpus run, restricted to batch-involving
     # pairs via the is_new flag
-    cands = lsh_candidate_pairs(
-        union, max_bucket_size, coverage_out, require_flag="is_new"
-    ).persist()
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(cands)
+    cands = cached(
+        lsh_candidate_pairs(union, max_bucket_size, coverage_out, require_flag="is_new")
+    )
     ids = cands.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    rows = (
-        index_shingles.unionByName(new_shingles)
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .persist()
+    rows = cached(
+        index_shingles.unionByName(new_shingles).join(
+            F.broadcast(ids), "doc_id", "left_semi"
+        )
     )
-    if coverage_out is not None:
-        coverage_out.setdefault("persisted", []).append(rows)
     verified = jaccard_for_pairs(rows, cands)
     return verified.filter(F.col("jaccard") >= threshold)

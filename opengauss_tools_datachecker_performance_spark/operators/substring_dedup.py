@@ -35,6 +35,7 @@ from opengauss_tools_datachecker_performance_spark.functions.text import (
     shingle_rows,
     ws_tokens,
 )
+from opengauss_tools_datachecker_performance_spark.session import cached
 
 
 def positional_shingle_rows(
@@ -55,7 +56,6 @@ def duplicate_spans(
     text_col: str = "text",
     k: int = 3,
     min_docs: int = 2,
-    handles_out: dict | None = None,
 ) -> DataFrame:
     """→ ``(doc_id, start_pos, end_pos, span_tokens, passage_key)``:
     maximal token spans (0-based, inclusive) duplicated across ≥
@@ -83,13 +83,9 @@ def duplicate_spans(
     Islands via gaps-and-islands: pos - row_number() is constant on a
     consecutive run; one window + one groupBy over the (small)
     duplicate-position stream. The corpus-token-sized shingle stream
-    feeds BOTH the frequency count and the hit join, so it is persisted
-    for the call (one tokenize/hash pass, not two); pass ``handles_out``
-    and call :func:`operators.dedup.release` on it after materializing
-    to drop the cache in long-lived sessions."""
-    rows = positional_shingle_rows(df, id_col, text_col, k).persist()
-    if handles_out is not None:
-        handles_out.setdefault("persisted", []).append(rows)
+    feeds BOTH the frequency count and the hit join, so it is cached in
+    the caller's cache scope (one tokenize/hash pass, not two)."""
+    rows = cached(positional_shingle_rows(df, id_col, text_col, k))
     dup_sh = (
         rows.groupBy("sh")
         .agg(F.countDistinct("doc_id").alias("_nd"))

@@ -32,6 +32,7 @@ from opengauss_tools_datachecker_performance_spark.plans.runner import (
     ValidationResult,
     partition_order,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope, cached
 
 MAX_DISPLAY_SIZE = 100  # CheckResultConstants.java:34
 
@@ -140,8 +141,8 @@ def summarize_dir(
     )
     if baseline_dir is not None:
         prev, _ = _read_frames(spark, baseline_dir)
-        reg = run_regression(violations, prev).persist()
-        try:
+        with cache_scope():
+            reg = cached(run_regression(violations, prev))
             reg.write.mode("overwrite").parquet(
                 os.path.join(out_dir, "regression.parquet")
             )
@@ -151,8 +152,6 @@ def summarize_dir(
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-        finally:
-            reg.unpersist()
         summary["regression"] = {
             "baseline_dir": baseline_dir,
             "new": counts.get("new", 0),

@@ -50,6 +50,7 @@ from opengauss_tools_datachecker_performance_spark.operators.diff import (
 from opengauss_tools_datachecker_performance_spark.plans.lineage import (
     partition_stats,
 )
+from opengauss_tools_datachecker_performance_spark.session import cached
 
 CONSTRAINTS = ["consistency", "unique", "referential", "null_text", "drift"]
 
@@ -117,6 +118,11 @@ def validate_docs(
     ``only_partitions`` implements resume: restrict the scan up front
     (partition pruning on the parquet/Iceberg partition column) —
     see plans.lineage for the anti-join that computes the list.
+
+    The digest frames, the diff and the violation union are cached in
+    the caller's :func:`~opengauss_tools_datachecker_performance_spark.session.cache_scope`
+    (released when it exits); called outside one, every frame stays
+    lazy and the verdict grid, a driver-side frame, is still complete.
     """
     spark = docs_source.sparkSession
 
@@ -193,15 +199,13 @@ def validate_docs(
             schema_message=sres.message,
         )
 
-    # --- digest frames: computed ONCE, persisted, reused by diff,
+    # --- digest frames: computed ONCE, cached, reused by diff,
     # uniqueness (k_hash reuse), drift (text_len), the partition
     # universe and the verdict grid. The digest frame is the small
     # projection of the scan (5 longs + key), so it is the right thing
-    # to persist at any scale — never the doc bodies.
-    dig_src = _enriched_digests(docs_source).persist()
-    dig_sink = (
-        _enriched_digests(docs_sink).persist() if docs_sink is not None else None
-    )
+    # to cache at any scale — never the doc bodies.
+    dig_src = cached(_enriched_digests(docs_source))
+    dig_sink = cached(_enriched_digests(docs_sink)) if docs_sink is not None else None
     # Materialize the digest caches as an explicit barrier before any
     # downstream branch is planned against them. Without this, the
     # first consumer to run is a driver-side BROADCAST BUILD (the
@@ -244,15 +248,16 @@ def validate_docs(
 
     # --- consistency diff (the reference's core check) ---
     if dig_sink is not None:
-        # persist: the diff result is tiny (≈ diff-rate × rows) but its
+        # cached: the diff result is tiny (≈ diff-rate × rows) but its
         # subtree is the bucket-prune + full-outer join over both digest
-        # frames; it feeds BOTH the violation rows and the updated-key
-        # IN-list below — without persist that consumer would re-execute
-        # the whole join subtree.
-        diffs = diff_digests(
-            dig_src, dig_sink, carry_cols=["part"], locate_spans=True
-        ).persist()
-        diffs.count()
+        # frames; it feeds BOTH the violation rows and the repair SQL —
+        # uncached, each consumer would re-execute the whole join
+        # subtree. Materialized here, when there is a cache to fill.
+        diffs = cached(
+            diff_digests(dig_src, dig_sink, carry_cols=["part"], locate_spans=True)
+        )
+        if diffs.is_cached:
+            diffs.count()
         # --- span location for updated keys rides the diff join
         # itself (classify_diff(locate_spans=True)): the digest frames
         # carry per-span hash arrays, so the first divergent index is
@@ -298,8 +303,8 @@ def validate_docs(
     violations = pieces[0]
     for p in pieces[1:]:
         violations = violations.unionByName(p)
-    violations = violations.persist()
-    violations_full = violations  # the persisted frame (unpersist handle)
+    violations = cached(violations)
+    violations_full = violations  # before the per-partition cap below
 
     # --- verdict counts come from the FULL violation set; the
     # enumerated rows can be capped per (part, constraint) — the
@@ -327,7 +332,7 @@ def validate_docs(
     # --- drift (partition-level; metric rides on the digest frame).
     # The per-partition quantile PROFILES are always exposed: a chunked
     # run (``__main__ --chunk-partitions``) sets skip_drift=True,
-    # persists each wave's profiles, and judges drift once over their
+    # writes each wave's profiles, and judges drift once over their
     # union so the baseline is run-global regardless of waving. ---
     drift_prof = quantile_profiles(
         dig_src.select("part", F.col("text_len").alias("metric")),

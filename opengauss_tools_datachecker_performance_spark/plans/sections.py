@@ -13,12 +13,13 @@ report file. Here each optional stage is a :data:`Section` record:
   to a summary.json without its section;
 * ``run(spark, args, ctx) -> dict`` — writes the stage's frames when
   its flags ask for it and returns the summary.json entries it owns
-  (``{}`` when not requested).
+  (``{}`` when not requested). It runs in its own cache scope
+  (session.py), so whatever it caches is released when it returns.
 
 ``__main__`` walks :data:`SECTIONS` at parse time and in the one tail
 that every summary-writing exit reaches, so a resumed run with nothing
 left to validate still honors every requested stage. ``ctx`` carries
-what the validation hands over: ``source_digests``, the persisted
+what the validation hands over: ``source_digests``, the cached
 enriched digest frame of a single full wave (or None).
 """
 
@@ -119,7 +120,6 @@ def _run_near_dup(spark, args, ctx) -> dict:
     from opengauss_tools_datachecker_performance_spark.operators.dedup import (
         coverage_counts,
         minhash_near_duplicates,
-        release,
     )
 
     cov: dict = {}
@@ -190,7 +190,6 @@ def _run_near_dup(spark, args, ctx) -> dict:
     pairs_path = os.path.join(args.report_dir, "near_dup_pairs.parquet")
     pairs.write.mode("overwrite").parquet(pairs_path)
     entries = {"coverage_bounds": coverage_counts(cov)}
-    release(cov)
     if args.near_dup_clusters:
         from opengauss_tools_datachecker_performance_spark.operators.components import (
             connected_components,
@@ -315,9 +314,6 @@ def _subdup_args(p) -> None:
 def _run_substring_dedup(spark, args, ctx) -> dict:
     if not args.substring_dedup_table:
         return {}
-    from opengauss_tools_datachecker_performance_spark.operators.dedup import (
-        release,
-    )
     from opengauss_tools_datachecker_performance_spark.operators.substring_dedup import (
         duplicate_spans,
         removal_plan,
@@ -326,14 +322,11 @@ def _run_substring_dedup(spark, args, ctx) -> dict:
 
     docs = _load(spark, args.substring_dedup_table)
     spans_path = os.path.join(args.report_dir, "duplicate_spans.parquet")
-    handles: dict = {}
     duplicate_spans(
         docs,
         k=args.substring_dedup_k,
         min_docs=args.substring_dedup_min_docs,
-        handles_out=handles,
     ).write.mode("overwrite").parquet(spans_path)
-    release(handles)  # downstream reads the written frame, not the plan
     # downstream stages read the WRITTEN frame — the shingle/island
     # computation runs once, not once per consumer
     spans = spark.read.parquet(spans_path)
@@ -424,7 +417,6 @@ def _run_source_overlap(spark, args, ctx) -> dict:
     if not args.source_overlap:
         return {}
     from opengauss_tools_datachecker_performance_spark.operators.dedup import (
-        release,
         source_overlap_matrix,
     )
 
@@ -443,7 +435,6 @@ def _run_source_overlap(spark, args, ctx) -> dict:
     out.write.mode("overwrite").parquet(path)
     n = spark.read.parquet(path).count()
     dropped = cov["overlap_dropped_fps"].count()
-    release(cov)
     msg = f"[source-overlap] {n} co-occurring source pairs → {path}"
     if dropped:
         msg += f" ({dropped} near-universal fingerprints capped out)"
@@ -496,7 +487,6 @@ def _run_corpus_stats(spark, args, ctx) -> dict:
         vocab_stats,
         with_span_text,
     )
-    from opengauss_tools_datachecker_performance_spark.operators.dedup import release
 
     docs = _load(spark, args.corpus_stats_table)
     if "text" not in docs.columns and "spans" in docs.columns:
@@ -525,12 +515,8 @@ def _run_corpus_stats(spark, args, ctx) -> dict:
         f"[corpus-stats] top-{args.corpus_stats_top_k} vocabulary → {vocab_path}"
     )
     if args.lm_surprisal:
-        handles: dict = {}
         lm_path = os.path.join(args.report_dir, "lm_surprisal.parquet")
-        bigram_surprisal_scores(docs, handles_out=handles).write.mode(
-            "overwrite"
-        ).parquet(lm_path)
-        release(handles)
+        bigram_surprisal_scores(docs).write.mode("overwrite").parquet(lm_path)
         sstats = (
             spark.read.parquet(lm_path)
             .agg(
@@ -705,11 +691,14 @@ def _snapshot_args(p) -> None:
 def _run_snapshot_delta(spark, args, ctx) -> dict:
     """The OLD digest companion vs this run's source digests → changed
     buckets + the partition re-validation scope. ``ctx["source_digests"]``
-    hands over the validation's persisted digest frame, so the raw
+    hands over the validation's cached digest frame, so the raw
     source is digested a second time only by a run that did not
     validate it in one full wave."""
     if not args.snapshot_delta:
         return {}
+    from opengauss_tools_datachecker_performance_spark.plans.runner import (
+        partition_order,
+    )
     from opengauss_tools_datachecker_performance_spark.plans.snapshot import (
         snapshot_bucket_delta,
         snapshot_drift,
@@ -733,7 +722,7 @@ def _run_snapshot_delta(spark, args, ctx) -> dict:
     roll_path = os.path.join(args.report_dir, "snapshot_rollup.parquet")
     rollup.write.mode("overwrite").parquet(roll_path)
     rolled = spark.read.parquet(roll_path).collect()  # bounded: #partitions
-    parts = sorted(r["part"] for r in rolled)
+    parts = sorted((r["part"] for r in rolled), key=partition_order)
     n_buckets = spark.read.parquet(delta_path).count()
     print(
         f"[snapshot] {len(parts)} partitions touched "
@@ -754,10 +743,13 @@ def _run_snapshot_delta(spark, args, ctx) -> dict:
             "overwrite"
         ).parquet(drift_path)
         drifted = sorted(
-            r["part"]
-            for r in spark.read.parquet(drift_path)
-            .filter(F.col("drifted"))
-            .collect()
+            (
+                r["part"]
+                for r in spark.read.parquet(drift_path)
+                .filter(F.col("drifted"))
+                .collect()
+            ),
+            key=partition_order,
         )
         print(f"[snapshot] drifted partitions vs old snapshot: {drifted}")
         section["drifted_partitions"] = drifted

@@ -4,8 +4,8 @@ A 10^12-doc table is validated incrementally: after the first full run,
 each subsequent run should touch only the data that changed between
 two table snapshots.  :func:`snapshot_bucket_delta` compares two
 digest frames (the enriched digest companion of sources/prehashed.py,
-or any (part, bucket, v_hash) projection) at BUCKET grain and emits
-exactly the re-validation scope:
+or any (part, bucket, k_hash, v_hash) projection) at BUCKET grain and
+emits exactly the re-validation scope:
 
 * bucket-level: every (part, bucket) whose row count or XOR digest
   differs between the snapshots, classified new/gone/changed;
@@ -30,16 +30,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opengauss_tools_datachecker_performance_spark.digest import signature_fold
+
 
 def _bucket_signatures(digests: DataFrame, side: str) -> DataFrame:
-    """(part, bucket, v_hash, …) → (part, bucket, n_<side>, sig_<side>)
-    partial-aggregated per-bucket signature."""
+    """(part, bucket, k_hash, v_hash, …) → (part, bucket, n_<side>,
+    sig_<side>): the partial-aggregated, key-bound per-bucket signature
+    (``digest.signature_fold``), so two docs of one bucket that swap
+    contents change it."""
     return digests.groupBy(
         F.col("part").cast("int").alias("part"),
         F.col("bucket").cast("int").alias("bucket"),
     ).agg(
         F.count(F.lit(1)).cast("long").alias(f"n_{side}"),
-        F.expr("bit_xor(v_hash)").alias(f"sig_{side}"),
+        signature_fold().alias(f"sig_{side}"),
+    )
+
+
+def _full_outer(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+    """Full outer join on ``keys`` with NULL matching NULL — docs with a
+    NULL partition value form one partition in both snapshots — and
+    each key column coalesced from its two sides."""
+    cond = [a[k].eqNullSafe(b[k]) for k in keys]
+    return a.join(b, cond, "full_outer").select(
+        *[F.coalesce(a[k], b[k]).alias(k) for k in keys],
+        *[c for c in a.columns + b.columns if c not in keys],
     )
 
 
@@ -55,9 +70,11 @@ def snapshot_bucket_delta(
     partitions survive; the row counts are the volumes inside the
     touched buckets (the re-validation cost estimate), not the full
     partition size."""
-    a = _bucket_signatures(old_digests, "old")
-    b = _bucket_signatures(new_digests, "new")
-    j = a.join(b, ["part", "bucket"], "full_outer")
+    j = _full_outer(
+        _bucket_signatures(old_digests, "old"),
+        _bucket_signatures(new_digests, "new"),
+        ["part", "bucket"],
+    )
     status = (
         F.when(F.col("n_old").isNull(), F.lit("new"))
         .when(F.col("n_new").isNull(), F.lit("gone"))
@@ -132,9 +149,7 @@ def snapshot_drift(
             q_expr.alias(f"q_{side}"),
         )
 
-    j = _prof(old_digests, "old").join(
-        _prof(new_digests, "new"), "part", "full_outer"
-    )
+    j = _full_outer(_prof(old_digests, "old"), _prof(new_digests, "new"), ["part"])
     gap = F.aggregate(
         F.zip_with(
             "q_new",

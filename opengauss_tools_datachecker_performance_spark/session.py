@@ -12,8 +12,10 @@ we pin UTC and keep all canonicalization TZ-explicit).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -108,3 +110,57 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: the open cache scopes of this thread, innermost last; each holds the
+#: release callbacks of the frames cached while it was innermost
+_SCOPES: ContextVar[tuple] = ContextVar("cache_scopes", default=())
+
+
+@contextmanager
+def cache_scope():
+    """The one lifetime of every frame the engine caches: frames cached
+    (:func:`cached`) or checkpointed (:func:`checkpointed`) while this
+    scope is the innermost one are released when it exits, on an
+    exception too, newest first. Usable as a decorator: a function that
+    materializes its result before returning opens its own scope; one
+    that returns lazy frames over cached intermediates leaves them to
+    its caller's scope.
+
+    The stack is a ``ContextVar``, so a worker thread (the digest
+    barrier's pool, a ``foreachBatch`` callback) sees no outer scope."""
+    held: list = []
+    token = _SCOPES.set(_SCOPES.get() + (held,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for release in reversed(held):
+            release()
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df`` persisted until the innermost :func:`cache_scope` exits.
+    Outside any scope ``df`` comes back unchanged and lazy: nothing is
+    cached that no one would release."""
+    scopes = _SCOPES.get()
+    if not scopes:
+        return df
+    df = df.persist()
+    scopes[-1].append(df.unpersist)
+    return df
+
+
+def checkpointed(df: DataFrame) -> DataFrame:
+    """An eager ``localCheckpoint`` of ``df`` (lineage truncated), whose
+    RDD the innermost :func:`cache_scope` releases when it exits;
+    ``DataFrame.unpersist`` does not reach it, the checkpointed plan's
+    RDD does. The one exception to the scope rule: outside any scope
+    the lineage is still truncated, and Spark's ContextCleaner
+    reclaims the RDD once nothing references it."""
+    df = df.localCheckpoint(eager=True)
+    scopes = _SCOPES.get()
+    if scopes:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        scopes[-1].append(lambda: rdd.unpersist(True))
+    return df

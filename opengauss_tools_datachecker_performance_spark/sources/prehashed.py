@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.digest import _enriched_digests
+from opengauss_tools_datachecker_performance_spark.session import cache_scope, cached
 
 
 def digest_companion_frame(docs: DataFrame, partition_col: str = "part") -> DataFrame:
@@ -84,6 +85,7 @@ def write_digest_companion(
     frame.write.mode(mode).partitionBy("part").parquet(path)
 
 
+@cache_scope()
 def update_digest_companion(
     spark: SparkSession,
     path: str,
@@ -108,60 +110,56 @@ def update_digest_companion(
     converges).
     """
     comp = spark.read.parquet(path)
-    # persist: the re-digested upsert frame feeds TWO actions below
+    # cached: the re-digested upsert frame feeds TWO actions below
     # (affected-part discovery, the rewrite), each reading its keys and
     # its rows — without it each action would re-read + re-digest the
     # upsert doc bodies, the exact I/O this function exists to minimize
     new = (
-        digest_companion_frame(upserts, partition_col).persist()
+        cached(digest_companion_frame(upserts, partition_col))
         if upserts is not None
         else None
     )
-    try:
-        touched = None
-        if delete_keys is not None:
-            touched = delete_keys.select(F.col("key").cast("string"))
-        if new is not None:
-            upk = new.select("key")
-            touched = upk if touched is None else touched.unionByName(upk)
-        if touched is None:
-            return []
-        # broadcast is right for the normal CDC trickle but fatal for
-        # a bulk backfill / wholesale delete whose key set is
-        # corpus-sized; with AQE on (production default) let the
-        # RUNTIME size decide, pinning the hint only when AQE is off
-        # (same treatment as checks/span_rules.py's dangling-ref join).
-        # No distinct: a semi/anti join ignores duplicate build keys,
-        # and a distinct would cost a shuffle that changes nothing.
-        aqe = (
-            spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
-            == "true"
-        )
-        t_side = touched if aqe else F.broadcast(touched)
+    touched = None
+    if delete_keys is not None:
+        touched = delete_keys.select(F.col("key").cast("string"))
+    if new is not None:
+        upk = new.select("key")
+        touched = upk if touched is None else touched.unionByName(upk)
+    if touched is None:
+        return []
+    # broadcast is right for the normal CDC trickle but fatal for
+    # a bulk backfill / wholesale delete whose key set is
+    # corpus-sized; with AQE on (production default) let the
+    # RUNTIME size decide, pinning the hint only when AQE is off
+    # (same treatment as checks/span_rules.py's dangling-ref join).
+    # No distinct: a semi/anti join ignores duplicate build keys,
+    # and a distinct would cost a shuffle that changes nothing.
+    aqe = (
+        spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
+        == "true"
+    )
+    t_side = touched if aqe else F.broadcast(touched)
 
-        # affected partitions: where new rows land + where touched keys
-        # currently live. The set is observed in-plan (driver-side,
-        # #partitions not #rows) while a noop sink drains the rows — no
-        # distinct shuffle — and the same pass fills the upsert cache
-        hit = comp.join(t_side, "key", "left_semi").select("part")
-        if new is not None:
-            hit = new.select("part").unionByName(hit)
-        seen = Observation()
-        hit.observe(seen, F.collect_set("part").alias("parts")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        parts = set(seen.get["parts"])
-        if not parts:
-            return []
+    # affected partitions: where new rows land + where touched keys
+    # currently live. The set is observed in-plan (driver-side,
+    # #partitions not #rows) while a noop sink drains the rows — no
+    # distinct shuffle — and the same pass fills the upsert cache
+    hit = comp.join(t_side, "key", "left_semi").select("part")
+    if new is not None:
+        hit = new.select("part").unionByName(hit)
+    seen = Observation()
+    hit.observe(seen, F.collect_set("part").alias("parts")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    parts = set(seen.get["parts"])
+    if not parts:
+        return []
 
-        cur = comp.filter(F.col("part").isin(list(parts)))
-        keep = cur.join(t_side, "key", "left_anti")
-        out = keep if new is None else keep.unionByName(new.select(*keep.columns))
-        _overwrite_partitions(spark, out, path, parts)
-        return sorted(parts)
-    finally:
-        if new is not None:
-            new.unpersist()
+    cur = comp.filter(F.col("part").isin(list(parts)))
+    keep = cur.join(t_side, "key", "left_anti")
+    out = keep if new is None else keep.unionByName(new.select(*keep.columns))
+    _overwrite_partitions(spark, out, path, parts)
+    return sorted(parts)
 
 
 def _overwrite_partitions(

@@ -42,8 +42,8 @@ from opengauss_tools_datachecker_performance_spark.operators.components import (
 )
 from opengauss_tools_datachecker_performance_spark.operators.dedup import (
     minhash_near_duplicates,
-    release,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope
 
 SCALES = {"A": (1, 10), "B": (10, 10)}
 
@@ -78,24 +78,24 @@ def run_scale(spark, sf_dir: str, tag: str) -> dict:
     docs = build_corpus(spark, sf_dir, fam, rep).persist()
     n_docs = docs.count()
     t0 = time.time()
-    cov: dict = {}
-    pairs = minhash_near_duplicates(
-        docs, "doc_id", "text", threshold=0.5, coverage_out=cov
-    ).persist()
-    n_pairs = pairs.count()
-    t_pairs = time.time() - t0
-    t1 = time.time()
-    labels = connected_components(pairs).persist()
-    n_labeled = labels.count()
-    surv = dedup_survivors(labels, docs)
-    n_clusters = surv.count()
-    hist = {
-        int(r["cluster_size"]): int(r["n_clusters"])
-        for r in cluster_size_histogram(labels).collect()
-    }
-    t_cc = time.time() - t1
-    wall = time.time() - t0
-    release(cov)
+    with cache_scope():
+        cov: dict = {}
+        pairs = minhash_near_duplicates(
+            docs, "doc_id", "text", threshold=0.5, coverage_out=cov
+        ).persist()
+        n_pairs = pairs.count()
+        t_pairs = time.time() - t0
+        t1 = time.time()
+        labels = connected_components(pairs).persist()
+        n_labeled = labels.count()
+        surv = dedup_survivors(labels, docs)
+        n_clusters = surv.count()
+        hist = {
+            int(r["cluster_size"]): int(r["n_clusters"])
+            for r in cluster_size_histogram(labels).collect()
+        }
+        t_cc = time.time() - t1
+        wall = time.time() - t0
     pairs.unpersist()
     labels.unpersist()
     docs.unpersist()

@@ -221,6 +221,41 @@ def test_cli_null_partition_is_reported(spark, tmp_path):
     assert failed[-1] is None and None not in failed[:-1]
 
 
+def test_cli_snapshot_delta_null_partition(spark, tmp_path):
+    """--snapshot-delta over a source with a NULL partition: an
+    unchanged NULL partition is neither touched nor drifted, and a
+    changed one is listed last."""
+    from pyspark.sql import functions as F
+
+    from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
+        write_digest_companion,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    write_corpus(spark, corpus, n_docs=200, n_assets=30, n_partitions=4)
+    sides = {}
+    for side in ("docs_source", "docs_sink"):
+        sides[side] = str(tmp_path / f"{side}_null.parquet")
+        spark.read.parquet(f"{corpus}/{side}.parquet").withColumn(
+            "part", F.when(F.col("part") != 2, F.col("part"))
+        ).write.partitionBy("part").parquet(sides[side])
+    old = str(tmp_path / "old_companion")
+    write_digest_companion(spark.read.parquet(sides["docs_source"]), old)
+
+    def delta(source: str, report: str) -> dict:
+        rc = main(
+            ["--source", source, "--report-dir", report, "--snapshot-delta", old],
+            spark=spark,
+        )
+        assert rc in (0, 1)
+        return json.load(open(os.path.join(report, "summary.json")))["snapshot_delta"]
+
+    same = delta(sides["docs_source"], str(tmp_path / "same"))
+    assert same["partitions_touched"] == [] and same["drifted_partitions"] == []
+    changed = delta(sides["docs_sink"], str(tmp_path / "changed"))["partitions_touched"]
+    assert changed[-1] is None and None not in changed[:-1]
+
+
 def test_cli_kill_and_resume(tmp_path):
     """Real kill -9 mid-run: the resumed process must finish ONLY the
     pending waves and the merged report must equal a clean run's."""

@@ -12,6 +12,7 @@ from opengauss_tools_datachecker_performance_spark.operators.dedup_index import 
     update_minhash_index,
     write_minhash_index,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope
 
 
 def _corpus(spark, n=120):
@@ -58,20 +59,22 @@ def test_incremental_matches_full_run(spark, tmp_path):
     batch_new = batch.filter(F.col("doc_id") != "5")
     buckets, shingles = minhash_index_frames(corpus)
 
-    inc = incremental_near_duplicates(
-        buckets, shingles, batch, threshold=0.2
-    )
+    # the operators' intermediate caches live in this scope, as in a run
+    with cache_scope():
+        inc = incremental_near_duplicates(
+            buckets, shingles, batch, threshold=0.2
+        )
 
-    full = minhash_near_duplicates(
-        corpus.unionByName(batch_new), "doc_id", "text", threshold=0.2
-    )
-    new_ids = {r["doc_id"] for r in batch_new.select("doc_id").collect()}
-    want = {
-        p
-        for p in _pairs_set(full)
-        if p[0] in new_ids or p[1] in new_ids
-    }
-    assert _pairs_set(inc) == want
+        full = minhash_near_duplicates(
+            corpus.unionByName(batch_new), "doc_id", "text", threshold=0.2
+        )
+        new_ids = {r["doc_id"] for r in batch_new.select("doc_id").collect()}
+        want = {
+            p
+            for p in _pairs_set(full)
+            if p[0] in new_ids or p[1] in new_ids
+        }
+        assert _pairs_set(inc) == want
     assert len(want) > 0  # the planted near-dups must actually pair
 
 
@@ -181,19 +184,22 @@ def test_ingest_batch_single_pass_equivalence(spark, tmp_path):
     corpus = _corpus(spark)
     batch = _batch(spark, corpus)
 
-    # reference: the two-call composition
+    # reference: the two-call composition; the operators' intermediate
+    # caches live in one scope per call, as in a run
     ref_idx = str(tmp_path / "ref_idx")
     write_minhash_index(corpus, ref_idx)
     rb, rs = read_minhash_index(spark, ref_idx)
-    ref_pairs = _pairs_set(
-        incremental_near_duplicates(rb, rs, batch, threshold=0.2)
-    )
+    with cache_scope():
+        ref_pairs = _pairs_set(
+            incremental_near_duplicates(rb, rs, batch, threshold=0.2)
+        )
     ref_n = update_minhash_index(spark, ref_idx, batch)
 
     idx = str(tmp_path / "idx")
     write_minhash_index(corpus, idx)
-    pairs, n = ingest_batch(spark, idx, batch, threshold=0.2)
-    got = _pairs_set(pairs)
+    with cache_scope():
+        pairs, n = ingest_batch(spark, idx, batch, threshold=0.2)
+        got = _pairs_set(pairs)
     assert got == ref_pairs and len(got) > 0
     assert n == ref_n
 
@@ -208,8 +214,9 @@ def test_ingest_batch_single_pass_equivalence(spark, tmp_path):
 
     # replay: same pairs again (unlike the composition, which goes
     # silent once the batch is indexed), same index contents
-    pairs2, n2 = ingest_batch(spark, idx, batch, threshold=0.2)
-    assert _pairs_set(pairs2) == ref_pairs
+    with cache_scope():
+        pairs2, n2 = ingest_batch(spark, idx, batch, threshold=0.2)
+        assert _pairs_set(pairs2) == ref_pairs
     assert n2 == ref_n  # replay overwrites its own subdirs
     assert _index_rows(idx) == _index_rows(ref_idx)
 

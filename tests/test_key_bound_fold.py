@@ -176,3 +176,23 @@ def test_pre_fold_ledger_reads_unaudited(spark, tmp_path):
         (r["run_id"] == "old-run", r["fold"]) for r in read_ledger(spark, ckpt).collect()
     }
     assert folds == {(True, None), (False, FOLD_VERSION)}
+
+
+def test_snapshot_delta_sees_swap_in_one_bucket(spark, tmp_path):
+    """--snapshot-delta against a companion written before two docs of
+    one (part, bucket) swapped contents reports that bucket changed."""
+    a, b = _same_bucket_pair(spark)
+    texts, parts = _corpus(a, b)
+    old = str(tmp_path / "old")
+    write_digest_companion(_docs(spark, texts, parts), old)
+    swapped = dict(texts, **{a: texts[b], b: texts[a]})
+    src = _write(_docs(spark, swapped, parts), str(tmp_path / "src"))
+    report = str(tmp_path / "report")
+    rc = main(
+        ["--source", src, "--report-dir", report, "--snapshot-delta", old],
+        spark=spark,
+    )
+    assert rc in (0, 1)
+    sd = json.load(open(os.path.join(report, "summary.json")))["snapshot_delta"]
+    assert sd["partitions_touched"] == [0]
+    assert sd["n_buckets_touched"] == 1

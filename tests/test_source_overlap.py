@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from opengauss_tools_datachecker_performance_spark.operators.dedup import (
     source_overlap_matrix,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope
 
 
 def _rows(df):
@@ -69,28 +70,27 @@ def test_overlap_universal_fingerprint_capped_with_ledger(spark):
 
 
 def test_overlap_without_ledger_releases_its_cache(spark):
-    """With no coverage ledger to hand the cached (source, fp) frame
-    to, the matrix releases it itself: no persisted RDD outlives the
-    call, and the rows and schema equal the ledger path's."""
+    """Without a coverage ledger, the cached (source, fp) frame lives
+    in the caller's cache scope: no persisted RDD outlives the scope,
+    and the rows and schema equal the ledger path's, which runs lazily
+    outside any scope."""
     df = spark.createDataFrame(
         [("A", "t1"), ("A", "t2"), ("B", "t1"), ("B", "t3"), ("C", "t2")],
         "source string, text string",
     )
     jsc = spark.sparkContext._jsc
     # entries persisted before may be garbage-collected meanwhile, so
-    # the check is that no new entry appears
+    # the check is that no new entry is left
     before = set(jsc.getPersistentRDDs().keys())
-    eager = source_overlap_matrix(df, coverage_out=None)
-    rows = sorted(eager.collect())
+    with cache_scope():
+        scoped = source_overlap_matrix(df, coverage_out=None)
+        rows = sorted(scoped.collect())
+        assert set(jsc.getPersistentRDDs().keys()) - before  # cached in the scope
     assert set(jsc.getPersistentRDDs().keys()) <= before
     cov: dict = {}
     lazy = source_overlap_matrix(df, coverage_out=cov)
-    try:
-        assert eager.schema == lazy.schema
-        assert rows == sorted(lazy.collect())
-    finally:
-        for frame in cov["persisted"]:
-            frame.unpersist()
+    assert scoped.schema == lazy.schema
+    assert rows == sorted(lazy.collect())
     assert set(jsc.getPersistentRDDs().keys()) <= before
 
 

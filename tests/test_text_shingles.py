@@ -149,8 +149,8 @@ def test_simhash_signature_composes_bands(spark):
 def test_dedup_coverage_accounting_and_release(spark, tmp_path):
     """Caps are never silent: a tiny mega-bucket cap must surface its
     dropped-entry count via coverage_counts, the counts must land in
-    the report summary's coverage_bounds, and release() must unpersist
-    every cached frame the operator registered."""
+    the report summary's coverage_bounds, and the cache scope must
+    release every frame the operator cached."""
     import json
     import os
 
@@ -158,8 +158,8 @@ def test_dedup_coverage_accounting_and_release(spark, tmp_path):
         coverage_counts,
         minhash_near_duplicates,
         ngram_jaccard_pairs,
-        release,
     )
+    from opengauss_tools_datachecker_performance_spark.session import cache_scope
 
     # 12 identical docs → every LSH band bucket holds 12 entries;
     # cap 5 drops them all, and every shingle has freq 12 > cap 5
@@ -167,23 +167,25 @@ def test_dedup_coverage_accounting_and_release(spark, tmp_path):
         [(str(i), "the same boilerplate text repeated for every doc here") for i in range(12)],
         "doc_id string, text string",
     )
-    cov: dict = {}
-    out = minhash_near_duplicates(
-        docs, "doc_id", "text", threshold=0.3, max_bucket_size=5, coverage_out=cov
-    )
-    assert out.count() == 0  # all candidates died with the mega-buckets
-    counts = coverage_counts(cov)
-    assert counts["minhash_dropped_bucket_entries"] == 12 * 4  # 4 bands
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with cache_scope():
+        cov: dict = {}
+        out = minhash_near_duplicates(
+            docs, "doc_id", "text", threshold=0.3, max_bucket_size=5, coverage_out=cov
+        )
+        assert out.count() == 0  # all candidates died with the mega-buckets
+        counts = coverage_counts(cov)
+        assert counts["minhash_dropped_bucket_entries"] == 12 * 4  # 4 bands
+        assert set(jsc.getPersistentRDDs().keys()) - before  # cached in the scope
+    # entries persisted before may be garbage-collected meanwhile, so
+    # the check is that no new entry is left
+    assert set(jsc.getPersistentRDDs().keys()) <= before
     cov2: dict = {}
     ngram_jaccard_pairs(
         docs, "doc_id", "text", threshold=0.3, max_shingle_freq=5, coverage_out=cov2
     ).count()
     assert coverage_counts(cov2)["ngram_dropped_stop_shingles"] > 0
-
-    persisted = list(cov.get("persisted", []))
-    assert persisted
-    release(cov)
-    assert all(not df.is_cached for df in persisted)
 
     # counts reach the report summary
     from opengauss_tools_datachecker_performance_spark.plans.report import (

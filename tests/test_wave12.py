@@ -183,6 +183,7 @@ def test_interleaved_profile_math(spark):
 
 
 def _dig(spark, rows):
+    """(part, bucket, v_hash) rows, one key per bucket."""
     return spark.createDataFrame(
         rows,
         T.StructType(
@@ -192,7 +193,7 @@ def _dig(spark, rows):
                 T.StructField("v_hash", T.LongType()),
             ]
         ),
-    )
+    ).withColumn("k_hash", F.col("bucket").cast("long"))
 
 
 def test_snapshot_bucket_delta_classification(spark):

@@ -30,6 +30,7 @@ from opengauss_tools_datachecker_performance_spark.plans.runner import (
     drift_verdicts,
     validate_docs,
 )
+from opengauss_tools_datachecker_performance_spark.session import cache_scope
 from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
     write_digest_companion,
 )
@@ -164,19 +165,18 @@ def test_null_partition_grid_counts_its_violations(spark, corpus):
 
 
 def test_barrier_fills_every_new_cache(spark, corpus):
-    """The barrier's per-partition collects still materialize both
-    digest frames completely (and the violation counts their cache)."""
+    """In a cache scope, the barrier's per-partition collects still
+    materialize both digest frames completely (and the violation counts
+    their cache)."""
     jsc = spark.sparkContext._jsc.sc()
     before = {i.id() for i in jsc.getRDDStorageInfo()}
-    res = validate_docs(corpus["docs_source"], corpus["docs_sink"], corpus["assets"])
-    try:
+    with cache_scope():
+        res = validate_docs(corpus["docs_source"], corpus["docs_sink"], corpus["assets"])
         new = [i for i in jsc.getRDDStorageInfo() if i.id() not in before]
         assert len(new) >= 3  # source + sink digests, violations
         assert all(i.numCachedPartitions() == i.numPartitions() for i in new)
         n_src = res.extras["digests_source"].count()
         assert sum(r[1] for r in res.extras["partition_stats"]) == n_src
-    finally:
-        _release(res)
 
 
 def _corpus(spark, tmp_path):
