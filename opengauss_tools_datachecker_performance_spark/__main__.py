@@ -94,7 +94,9 @@ def build_parser() -> argparse.ArgumentParser:
              ".parquet + a streaming_demo.json summary; requires "
              "--sink and --checkpoint-dir",
     )
-    p.add_argument("--partition-col", default="part")
+    p.add_argument("--partition-col", default="part",
+                   help="partition column: int, string, date or any type Spark "
+                        "partitions by, NULL included; reports and ledger keep its type")
     p.add_argument("--drift-threshold", type=float, default=0.15)
     p.add_argument(
         "--max-violations", type=int, default=None,
@@ -132,7 +134,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--companion-audit", choices=["none", "ledger", "full"], default="none",
         help="staleness gate before trusting a companion. Every mode first "
              "checks partition PRESENCE against the raw table's partition "
-             "column (a single-int-column scan, no bodies): a partition the "
+             "column (a scan of that one column, no bodies): a partition the "
              "table has but the companion lacks is stale. 'none' (default) "
              "stops there — right for writer-maintained companions, where "
              "data and companion move together. 'ledger' additionally "
@@ -174,13 +176,8 @@ _DRIFT_CHUNK = 999_999_999
 def _has_chunk_subdirs(report_dir: str) -> bool:
     """True if a previous (chunked) run left chunk= subdirs in this
     report dir — the resumed run must keep appending to that layout."""
-    for frame in ("violations.parquet", "verdicts.parquet"):
-        base = os.path.join(report_dir, frame)
-        if os.path.isdir(base) and any(
-            e.startswith("chunk=") for e in os.listdir(base)
-        ):
-            return True
-    return False
+    base = glob.escape(report_dir)
+    return any(glob.glob(os.path.join(base, f, "chunk=*")) for f in ("violations.parquet", "verdicts.parquet"))
 
 
 def _finalize_drift(spark: SparkSession, report_dir: str, threshold: float) -> None:
@@ -407,22 +404,14 @@ def _ledger_reference_stats(spark: SparkSession, checkpoint_dir: str):
     Body-free — the ledger recorded these stats when the partition
     last validated. Only entries of the current fold version count: a
     partition whose entries predate it reads as unaudited, not stale."""
-    from pyspark.sql import Window
-
     from opengauss_tools_datachecker_performance_spark.digest import FOLD_VERSION
-    from opengauss_tools_datachecker_performance_spark.plans.lineage import (
-        read_ledger,
-    )
+    from opengauss_tools_datachecker_performance_spark.plans.lineage import read_ledger
 
     led = read_ledger(spark, checkpoint_dir).filter(
         (F.col("status") == "done") & (F.col("fold") == FOLD_VERSION)
     )
-    w = Window.partitionBy("part").orderBy(F.col("wall_ts").desc())
-    return (
-        led.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("part", "n_rows", "digest")
-    )
+    latest = F.max_by(F.struct("n_rows", "digest"), "wall_ts").alias("s")
+    return led.groupBy("part").agg(latest).select("part", "s.*")
 
 
 def _check_args(parser: argparse.ArgumentParser, args) -> None:
@@ -481,8 +470,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
 
 def _run(spark: SparkSession, args) -> int:
+    from opengauss_tools_datachecker_performance_spark.partitions import (
+        partition_join,
+        partition_order,
+    )
     from opengauss_tools_datachecker_performance_spark.plans.lineage import (
         pending_partitions,
+        read_ledger,
         record_partitions,
     )
     from opengauss_tools_datachecker_performance_spark.plans.report import (
@@ -526,33 +520,26 @@ def _run(spark: SparkSession, args) -> int:
                 return 2
             comp = read_digest_companion(spark, ref)
             # Unconditional body-free PRESENCE check (every audit
-            # mode): the raw table's partition column is a single-int
+            # mode): the raw table's partition column is a one-column
             # scan, so comparing partition SETS costs no body read. A
             # partition the table has but the companion lacks (new,
             # never ingested into the companion) or the companion has
             # but the table lost (wholesale delete) is stale — without
             # this, a companion-missing partition silently drops out
             # of the validation universe.
-            raw_parts = bodies.select(
-                F.col(args.partition_col).cast("int").alias("part")
-            ).distinct()
-            comp_parts = comp.select(F.col("part").cast("int")).distinct()
-
-            def _presence(missing_from, present_in, reason):
-                return present_in.join(missing_from, "part", "left_anti").select(
-                    "part",
-                    F.lit(reason).alias("reason"),
-                    F.lit(None).cast("long").alias("companion_n_rows"),
-                    F.lit(None).cast("long").alias("reference_n_rows"),
-                    F.lit(None).cast("long").alias("companion_digest"),
-                    F.lit(None).cast("long").alias("reference_digest"),
-                )
-
-            stale_df = _presence(
-                comp_parts, raw_parts, "missing_in_companion"
-            ).unionByName(
-                _presence(raw_parts, comp_parts, "missing_in_reference")
+            present = partition_join(
+                bodies.select(F.col(args.partition_col).alias("part"), F.lit(1).alias("_raw"))
+                .distinct(),
+                comp.select("part", F.lit(1).alias("_comp")).distinct(),
             )
+            stale_df = present.select(
+                "part",
+                F.when(F.col("_comp").isNull(), "missing_in_companion")
+                .when(F.col("_raw").isNull(), "missing_in_reference")
+                .alias("reason"),
+                *(F.lit(None).cast("long").alias(f"{side}_{stat}")
+                  for stat in ("n_rows", "digest") for side in ("companion", "reference")),
+            ).filter(F.col("reason").isNotNull())
             ref_stats = None
             if args.companion_audit == "full":
                 from opengauss_tools_datachecker_performance_spark.plans.lineage import (
@@ -652,6 +639,18 @@ def _run(spark: SparkSession, args) -> int:
                     "--companion-repair) to clear it"
                 )
 
+    if args.resume and args.checkpoint_dir:
+        # no part of a ledger of another type matches: all would read pending
+        led = read_ledger(spark, args.checkpoint_dir).schema["part"].dataType
+        table = docs_source.schema[src_part_col].dataType.simpleString()
+        if led.simpleString() not in ("void", table):
+            print(
+                f"[resume] error: the ledger's part type {led.simpleString()} "
+                f"differs from the table's {table} ({args.checkpoint_dir})",
+                file=sys.stderr,
+            )
+            return 2
+
     n = args.chunk_partitions
     # The partition universe is needed up front only to cut waves or to
     # resume; a single fresh wave takes its partitions from the digest
@@ -667,7 +666,9 @@ def _run(spark: SparkSession, args) -> int:
             parts_df = parts_df.unionByName(
                 docs_sink.select(F.col(sink_part_col).alias("part"))
             )
-        universe = sorted(r[0] for r in parts_df.distinct().collect())
+        universe = sorted(
+            (r[0] for r in parts_df.distinct().collect()), key=partition_order
+        )
         pending = universe
     if args.resume and args.checkpoint_dir:
         pending = pending_partitions(spark, args.checkpoint_dir, universe)
@@ -711,12 +712,16 @@ def _run(spark: SparkSession, args) -> int:
         if chunked and n > 0
         else [pending]
     )
+    # chunk=<id>: the universe position of the wave's first partition, an
+    # int for any partition type and the same when a resume redoes the wave
+    position = {p: i for i, p in enumerate(universe or [])}
     schema_ok, schema_msg = True, ""
     held_digests = None  # a single full wave's digest frame, for the sections
     progress = ProgressTracker(args.report_dir, run_id)
     for ch in chunks:
         # fast path: a full single wave needs no partition filter
         only = ch if chunked or ch != universe else None
+        chunk = position[ch[0]] if chunked else None
         # a single full wave's frames live in the run's scope: its
         # cached digest frame covers the whole source, so the sections
         # take it (a snapshot delta then never digests the source a
@@ -732,9 +737,7 @@ def _run(spark: SparkSession, args) -> int:
                 max_violations_per_partition=args.max_violations,
                 skip_drift=chunked,  # judged run-globally after the waves
             )
-            write_frames(
-                result, args.report_dir, chunk=(min(ch) if chunked else None)
-            )
+            write_frames(result, args.report_dir, chunk=chunk)
             if args.emit_repair and result.extras.get("diffs") is not None:
                 from opengauss_tools_datachecker_performance_spark.plans.report import (
                     write_repair_sql,
@@ -746,12 +749,12 @@ def _run(spark: SparkSession, args) -> int:
                     source_table=args.source,
                     sink_table=args.sink,
                     batch_size=args.repair_batch_size,
-                    chunk=(min(ch) if chunked else None),
+                    chunk=chunk,
                 )
             if chunked and result.schema_ok:
                 result.extras["drift_profiles"].write.mode("overwrite").parquet(
                     os.path.join(
-                        args.report_dir, "drift_profiles.parquet", f"chunk={min(ch)}"
+                        args.report_dir, "drift_profiles.parquet", f"chunk={chunk}"
                     )
                 )
                 print(f"[wave] partitions {ch[0]}..{ch[-1]} written", flush=True)
@@ -768,7 +771,8 @@ def _run(spark: SparkSession, args) -> int:
             len(result.extras["partitions"]), sum(r[1] for r in stats)
         )
         if args.checkpoint_dir:
-            record_partitions(spark, args.checkpoint_dir, run_id, stats)
+            part_type = result.extras["digests_source"].schema["part"].dataType
+            record_partitions(spark, args.checkpoint_dir, run_id, stats, part_type)
         if only is None:
             held_digests = result.extras.get("digests_source")
 
@@ -796,9 +800,10 @@ def _finish(
     """The one tail every summary-writing exit reaches: run each
     requested optional stage (plans/sections.py), then write the
     summary. ``refresh_only`` marks a resumed run with nothing left to
-    validate: the stages still run, the summary is refreshed
-    best-effort over the frames a previous run left in this report
-    dir, and the exit code is 0."""
+    validate: the stages still run and the summary is refreshed over
+    the frames a previous run left in this report dir; the exit code is
+    the refreshed summary's, as for a fresh run, and 0 only when there
+    is nothing to refresh."""
     from opengauss_tools_datachecker_performance_spark.plans.report import (
         summarize_dir,
     )
@@ -838,8 +843,6 @@ def _finish(
         # PREVIOUS run's leftovers must not fail this run, but it must
         # be visible
         print(f"[summary] WARNING: refresh skipped: {exc}")
-        return 0
-    if refresh_only:
         return 0
     print(f"[validate] run={run_id} result={summary['result']}")
     if "regression" in summary:

@@ -150,7 +150,7 @@ def interleaved_profile(docs: DataFrame, partition_col: str = "part") -> DataFra
         lambda acc, v: acc + v,
     )
     per_doc = docs.select(
-        F.col(partition_col).cast("int").alias("part"),
+        F.col(partition_col).alias("part"),
         F.size(spans).alias("_n_spans"),
         n_media.alias("_n_media"),
         toks.alias("_toks"),

@@ -320,10 +320,11 @@ def is_enriched(df: DataFrame) -> bool:
     return set(ENRICHED_COLS) <= set(df.columns)
 
 
-def enriched_schema(spark: SparkSession) -> T.StructType:
+def enriched_schema(spark: SparkSession, part_type: T.DataType) -> T.StructType:
     """The companion contract's exact types, derived from the docs
-    schema through the real projection (never hand-maintained)."""
-    empty = spark.createDataFrame([], DOCS_SCHEMA).withColumn("part", F.lit(0))
+    schema through the real projection (never hand-maintained); ``part``
+    keeps the partition column's own type."""
+    empty = spark.createDataFrame([], DOCS_SCHEMA).withColumn("part", F.lit(None).cast(part_type))
     return _enriched_digests(empty).schema
 
 

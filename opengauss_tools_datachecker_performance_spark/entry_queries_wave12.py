@@ -192,7 +192,7 @@ def _plain_canon(spans: Column) -> Column:
 def _portable_digest_frame(docs: DataFrame) -> DataFrame:
     kh = portable_hash64(F.col("doc_id"))
     return docs.select(
-        F.col("part").cast("int").alias("part"),
+        "part",
         F.pmod(kh, F.lit(_N_SNAP_BUCKETS)).cast("int").alias("bucket"),
         kh.alias("k_hash"),
         portable_hash64(_plain_canon(F.col("spans"))).alias("v_hash"),

@@ -8,10 +8,12 @@ partition:
 
     (run_id, part, n_rows, digest, status, wall_ts, fold)
 
-``digest`` is digest.signature_fold over the partition's rows and
-``fold`` the version of that fold (digest.FOLD_VERSION); a row of
-another version (NULL: written before the column existed) still counts
-as done for resume, but its digest is not comparable with a fresh one.
+``part`` has the type of the table's partition column (partitions.py);
+``--resume`` refuses a ledger of another ``part`` type. ``digest`` is
+digest.signature_fold over the partition's rows and ``fold`` the
+version of that fold (digest.FOLD_VERSION); a row of another version
+(NULL: written before the column existed) still counts as done for
+resume, but its digest is not comparable with a fresh one.
 
 Resume = read the ledger, take parts with status='done', anti-join
 them from the partition universe, and validate only the remainder —
@@ -24,19 +26,21 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from opengauss_tools_datachecker_performance_spark.digest import (
     FOLD_VERSION,
     _enriched_digests,
     signature_fold,
 )
+from opengauss_tools_datachecker_performance_spark.partitions import partition_order
 
-_LEDGER_SCHEMA = (
-    "run_id string, part int, n_rows long, digest long, status string, "
-    "wall_ts double, fold int"
-)
+
+def _ledger_schema(part_type: T.DataType) -> str:
+    return f"run_id string, part {part_type.simpleString()}, n_rows long, digest long, status string, wall_ts double, fold int"
 
 
 def ledger_path(checkpoint_dir: str) -> str:
@@ -44,31 +48,45 @@ def ledger_path(checkpoint_dir: str) -> str:
 
 
 def read_ledger(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The ledger, ``part`` typed as its files store it. One with no
+    committed file (none yet, or a first append killed) reads as empty;
+    an unreadable file raises — read as empty, ``--resume`` would redo
+    every partition and a ledger audit would check nothing."""
     path = ledger_path(checkpoint_dir)
     try:
-        return spark.read.schema(_LEDGER_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], _LEDGER_SCHEMA)
+        part_type = spark.read.parquet(path).schema["part"].dataType
+    except AnalysisException as exc:
+        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return spark.createDataFrame([], _ledger_schema(T.NullType()))
+    # the full schema: a row written before ``fold`` existed reads NULL
+    return spark.read.schema(_ledger_schema(part_type)).parquet(path)
 
 
-def completed_partitions(spark: SparkSession, checkpoint_dir: str) -> set[int]:
-    rows = (
-        read_ledger(spark, checkpoint_dir)
-        .filter(F.col("status") == "done")
-        .select("part")
-        .distinct()
-        .collect()
-    )
-    return {r["part"] for r in rows}
+def completed_partitions(spark: SparkSession, checkpoint_dir: str) -> set:
+    done = read_ledger(spark, checkpoint_dir).filter(F.col("status") == "done")
+    return {r["part"] for r in done.select("part").distinct().collect()}
 
 
 def pending_partitions(
-    spark: SparkSession, checkpoint_dir: str, all_partitions: list[int]
-) -> list[int]:
+    spark: SparkSession, checkpoint_dir: str, all_partitions: list
+) -> list:
     """The resume anti-join (driver-side set difference — the universe
     is #partitions, not #rows)."""
     done = completed_partitions(spark, checkpoint_dir)
-    return sorted(set(all_partitions) - done)
+    return sorted(set(all_partitions) - done, key=partition_order)
+
+
+def arrow_frame(spark: SparkSession, schema: T.StructType, rows: list) -> DataFrame:
+    """A driver-held row list as one Arrow-backed frame (no Python
+    worker runs when it is scanned)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def record_partitions(
@@ -76,28 +94,20 @@ def record_partitions(
     checkpoint_dir: str,
     run_id: str,
     partition_stats: DataFrame | list[tuple],
+    part_type: T.DataType | None = None,
 ) -> None:
     """Append (part, n_rows, digest) stats as 'done' ledger rows.
     ``partition_stats``: a frame with columns part, n_rows, digest, or
     those rows already on the driver (validate_docs' barrier collects
-    them as extras["partition_stats"])."""
+    them as extras["partition_stats"]) with ``part_type``, the type of
+    the digest frame's ``part``. The ledger keeps that type."""
     if not isinstance(partition_stats, DataFrame):
-        import pyarrow as pa
-
-        part, n_rows, digest = zip(*partition_stats) if partition_stats else ((),) * 3
-        partition_stats = spark.createDataFrame(
-            pa.table(
-                {
-                    "part": pa.array(part),
-                    "n_rows": pa.array(n_rows, pa.int64()),
-                    "digest": pa.array(digest, pa.int64()),
-                }
-            )
-        )
+        schema = f"part {part_type.simpleString()}, n_rows long, digest long"
+        partition_stats = arrow_frame(spark, T.StructType.fromDDL(schema), partition_stats)
     now = time.time()
     out = partition_stats.select(
         F.lit(run_id).alias("run_id"),
-        F.col("part").cast("int"),
+        F.col("part"),
         F.col("n_rows").cast("long"),
         F.col("digest").cast("long"),
         F.lit("done").alias("status"),

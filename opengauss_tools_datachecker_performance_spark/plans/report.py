@@ -12,11 +12,12 @@ by key (the reference keeps sorted TreeSets,
 CheckDiffResult.initEmptyCollections:132-136).
 
 Chunked runs (``__main__ --chunk-partitions``) write each wave into a
-``chunk=<id>`` subdirectory — re-running a wave OVERWRITES its own
-subdir, so a killed-and-resumed run never double-counts (idempotent
-retry, same property Spark task retries rely on); the final summary
-reads the whole directory tree back (Spark partition discovery on the
-``chunk=`` dirs).
+``chunk=<id>`` subdirectory (``<id>``: the position of the wave's first
+partition in the run's partition order, whatever the partition type) —
+re-running a wave OVERWRITES its own subdir, so a killed-and-resumed
+run never double-counts (idempotent retry, same property Spark task
+retries rely on); the final summary reads the whole directory tree
+back (Spark partition discovery on the ``chunk=`` dirs).
 """
 
 from __future__ import annotations
@@ -28,10 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from opengauss_tools_datachecker_performance_spark.plans.runner import (
-    ValidationResult,
-    partition_order,
-)
+from opengauss_tools_datachecker_performance_spark.partitions import json_value, partition_order
+from opengauss_tools_datachecker_performance_spark.plans.runner import ValidationResult
 from opengauss_tools_datachecker_performance_spark.session import cache_scope, cached
 
 MAX_DISPLAY_SIZE = 100  # CheckResultConstants.java:34
@@ -159,7 +158,7 @@ def summarize_dir(
             "persisting": counts.get("persisting", 0),
         }
     with open(os.path.join(out_dir, "summary.json"), "w") as f:
-        json.dump(summary, f, indent=2, sort_keys=True)
+        json.dump(summary, f, indent=2, sort_keys=True, default=json_value)
     # success.log / failed.log analogues
     failed = sorted(
         {r["part"] for r in verdict_rows if r["status"] == "fail"},

@@ -11,6 +11,9 @@ datachecker-check/.../modules/check/CheckDiffResult.java:55-130,
 * ``verdicts``:   (part, constraint, n_violations, status) — complete
   grid over partitions × constraints; ``status`` ∈ pass|fail.
 
+``part`` in both has the type of the input's partition column (int,
+string, date, …), and NULL is a partition of its own (partitions.py).
+
 Constraints: consistency (diff vs sink: detail=insert|update|delete),
 unique, referential, null_text, drift, schema.
 """
@@ -47,14 +50,14 @@ from opengauss_tools_datachecker_performance_spark.digest import (
 from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
 )
+from opengauss_tools_datachecker_performance_spark.partitions import partition_filter, partition_order
 from opengauss_tools_datachecker_performance_spark.plans.lineage import (
+    arrow_frame,
     partition_stats,
 )
 from opengauss_tools_datachecker_performance_spark.session import cached
 
 CONSTRAINTS = ["consistency", "unique", "referential", "null_text", "drift"]
-
-_VIOLATION_SCHEMA = "part int, constraint string, key string, span_idx int, detail string"
 
 
 @dataclass
@@ -66,31 +69,15 @@ class ValidationResult:
     extras: dict = field(default_factory=dict)
 
 
-def _empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], _VIOLATION_SCHEMA)
-
-
-def partition_order(p) -> tuple:
-    """Sort key for partition values with NULL among them (NULL last)."""
-    return (p is None, p)
+def _empty_violations(spark: SparkSession, part_type: T.DataType) -> DataFrame:
+    schema = f"part {part_type.simpleString()}, constraint string, key string, span_idx int, detail string"
+    return spark.createDataFrame([], schema)
 
 
 def _partition_stats(dig: DataFrame) -> list[tuple]:
     """(part, n_rows, digest) per partition of a digest frame, collected
     (the lineage digest folds the frame's stored hashes)."""
     return [tuple(r) for r in partition_stats(dig).collect()]
-
-
-def _arrow_frame(spark: SparkSession, schema: T.StructType, rows: list) -> DataFrame:
-    """A driver-held row list as one Arrow-backed frame (no Python
-    worker runs when it is scanned)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema=schema)
 
 
 def drift_verdicts(drift: DataFrame) -> DataFrame:
@@ -108,7 +95,7 @@ def validate_docs(
     docs_sink: DataFrame | None,
     assets: DataFrame | None,
     partition_col: str = "part",
-    only_partitions: list[int] | None = None,
+    only_partitions: list | None = None,
     drift_threshold: float = 0.15,
     max_violations_per_partition: int | None = None,
     skip_drift: bool = False,
@@ -116,8 +103,9 @@ def validate_docs(
     """Run every applicable check; returns violations + verdict grid.
 
     ``only_partitions`` implements resume: restrict the scan up front
-    (partition pruning on the parquet/Iceberg partition column) —
-    see plans.lineage for the anti-join that computes the list.
+    (partition pruning on the parquet/Iceberg partition column; a None
+    in the list selects the NULL partition) — see plans.lineage for
+    the anti-join that computes the list.
 
     The digest frames, the diff and the violation union are cached in
     the caller's :func:`~opengauss_tools_datachecker_performance_spark.session.cache_scope`
@@ -137,9 +125,8 @@ def validate_docs(
     # — _enriched_digests normalizes each input independently.
     def _precheck(df: DataFrame):
         if is_enriched(df):
-            return check_schema(
-                df.select(*ENRICHED_COLS), enriched_schema(spark), check_types=True
-            )
+            contract = enriched_schema(spark, df.schema["part"].dataType)
+            return check_schema(df.select(*ENRICHED_COLS), contract, check_types=True)
         present = {f.name for f in df.schema.fields}
         probe_cols = [f.name for f in DOCS_SCHEMA.fields if f.name in present]
         return check_schema(
@@ -166,9 +153,9 @@ def validate_docs(
     # raise UNRESOLVED_COLUMN and mask the graceful fail verdict below
     if only_partitions is not None:
         if "part" in docs_source.columns:
-            docs_source = docs_source.filter(F.col("part").isin(only_partitions))
+            docs_source = partition_filter(docs_source, only_partitions)
         if docs_sink is not None and "part" in docs_sink.columns:
-            docs_sink = docs_sink.filter(F.col("part").isin(only_partitions))
+            docs_sink = partition_filter(docs_sink, only_partitions)
 
     if not sres.equal:
         # the fail branch cannot assume the partition column exists —
@@ -178,22 +165,20 @@ def validate_docs(
             for d in (docs_source, docs_sink)
             if d is not None and "part" in d.columns
         ]
+        part_type = sides[0].schema["part"].dataType if sides else T.StringType()
+        parts_all = spark.range(1).select(F.lit(None).cast(part_type).alias("part"))
         if sides:
-            parts_all = sides[0].select("part").distinct()
+            parts_all = sides[0].select("part")
             for d in sides[1:]:
-                parts_all = parts_all.union(d.select("part")).distinct()
-        else:
-            parts_all = spark.range(1).select(
-                F.lit(None).cast("int").alias("part")
-            )
-        verdicts = parts_all.select(
+                parts_all = parts_all.union(d.select("part"))
+        verdicts = parts_all.distinct().select(
             "part",
             F.lit("schema").alias("constraint"),
             F.lit(1).alias("n_violations"),
             F.lit("fail").alias("status"),
         )
         return ValidationResult(
-            violations=_empty_violations(spark),
+            violations=_empty_violations(spark, part_type),
             verdicts=verdicts,
             schema_ok=False,
             schema_message=sres.message,
@@ -375,7 +360,7 @@ def validate_docs(
         # partitions × constraints grid
         profiled = {r[0] for r in dv}
         rows += dv + [(p, "drift", 1, "fail") for p in parts_all if p not in profiled]
-    verdicts = _arrow_frame(
+    verdicts = arrow_frame(
         spark,
         T.StructType(
             [

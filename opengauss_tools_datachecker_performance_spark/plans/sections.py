@@ -696,9 +696,7 @@ def _run_snapshot_delta(spark, args, ctx) -> dict:
     validate it in one full wave."""
     if not args.snapshot_delta:
         return {}
-    from opengauss_tools_datachecker_performance_spark.plans.runner import (
-        partition_order,
-    )
+    from opengauss_tools_datachecker_performance_spark.partitions import partition_order
     from opengauss_tools_datachecker_performance_spark.plans.snapshot import (
         snapshot_bucket_delta,
         snapshot_drift,
@@ -742,15 +740,8 @@ def _run_snapshot_delta(spark, args, ctx) -> dict:
         snapshot_drift(old, new, threshold=args.drift_threshold).write.mode(
             "overwrite"
         ).parquet(drift_path)
-        drifted = sorted(
-            (
-                r["part"]
-                for r in spark.read.parquet(drift_path)
-                .filter(F.col("drifted"))
-                .collect()
-            ),
-            key=partition_order,
-        )
+        rows = spark.read.parquet(drift_path).filter(F.col("drifted")).collect()
+        drifted = sorted((r["part"] for r in rows), key=partition_order)
         print(f"[snapshot] drifted partitions vs old snapshot: {drifted}")
         section["drifted_partitions"] = drifted
     else:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.digest import signature_fold
+from opengauss_tools_datachecker_performance_spark.partitions import partition_join
 
 
 def _bucket_signatures(digests: DataFrame, side: str) -> DataFrame:
@@ -39,22 +40,10 @@ def _bucket_signatures(digests: DataFrame, side: str) -> DataFrame:
     (``digest.signature_fold``), so two docs of one bucket that swap
     contents change it."""
     return digests.groupBy(
-        F.col("part").cast("int").alias("part"),
-        F.col("bucket").cast("int").alias("bucket"),
+        "part", F.col("bucket").cast("int").alias("bucket")
     ).agg(
         F.count(F.lit(1)).cast("long").alias(f"n_{side}"),
         signature_fold().alias(f"sig_{side}"),
-    )
-
-
-def _full_outer(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
-    """Full outer join on ``keys`` with NULL matching NULL — docs with a
-    NULL partition value form one partition in both snapshots — and
-    each key column coalesced from its two sides."""
-    cond = [a[k].eqNullSafe(b[k]) for k in keys]
-    return a.join(b, cond, "full_outer").select(
-        *[F.coalesce(a[k], b[k]).alias(k) for k in keys],
-        *[c for c in a.columns + b.columns if c not in keys],
     )
 
 
@@ -70,7 +59,7 @@ def snapshot_bucket_delta(
     partitions survive; the row counts are the volumes inside the
     touched buckets (the re-validation cost estimate), not the full
     partition size."""
-    j = _full_outer(
+    j = partition_join(
         _bucket_signatures(old_digests, "old"),
         _bucket_signatures(new_digests, "new"),
         ["part", "bucket"],
@@ -84,32 +73,18 @@ def snapshot_bucket_delta(
             F.lit("changed"),
         )
     )
-    delta = (
-        j.select(
-            "part",
-            "bucket",
-            status.alias("status"),
-            F.col("n_old").alias("n_old"),
-            F.col("n_new").alias("n_new"),
-        )
-        .filter(F.col("status").isNotNull())
+    delta = j.select("part", "bucket", status.alias("status"), "n_old", "n_new").filter(
+        F.col("status").isNotNull()
     )
     rollup = delta.groupBy("part").agg(
-        F.sum((F.col("status") == "changed").cast("long"))
-        .cast("long")
-        .alias("n_buckets_changed"),
-        F.sum((F.col("status") == "new").cast("long"))
-        .cast("long")
-        .alias("n_buckets_new"),
-        F.sum((F.col("status") == "gone").cast("long"))
-        .cast("long")
-        .alias("n_buckets_gone"),
-        F.sum(F.coalesce(F.col("n_old"), F.lit(0)))
-        .cast("long")
-        .alias("delta_rows_old"),
-        F.sum(F.coalesce(F.col("n_new"), F.lit(0)))
-        .cast("long")
-        .alias("delta_rows_new"),
+        *(
+            F.sum((F.col("status") == s).cast("long")).alias(f"n_buckets_{s}")
+            for s in ("changed", "new", "gone")
+        ),
+        *(
+            F.sum(F.coalesce(F.col(f"n_{s}"), F.lit(0))).cast("long").alias(f"delta_rows_{s}")
+            for s in ("old", "new")
+        ),
     )
     return delta, rollup
 
@@ -144,12 +119,12 @@ def snapshot_drift(
     )
 
     def _prof(df: DataFrame, side: str) -> DataFrame:
-        return df.groupBy(F.col("part").cast("int").alias("part")).agg(
+        return df.groupBy("part").agg(
             F.count(F.lit(1)).cast("long").alias(f"n_{side}"),
             q_expr.alias(f"q_{side}"),
         )
 
-    j = _full_outer(_prof(old_digests, "old"), _prof(new_digests, "new"), ["part"])
+    j = partition_join(_prof(old_digests, "old"), _prof(new_digests, "new"))
     gap = F.aggregate(
         F.zip_with(
             "q_new",
@@ -165,11 +140,8 @@ def snapshot_drift(
         .otherwise(F.lit("compared"))
     )
     score = F.when(status == "compared", gap)
+    drifted = F.coalesce(score > threshold, F.lit(True))
     return j.select(
-        "part",
-        status.alias("status"),
-        F.col("n_old"),
-        F.col("n_new"),
-        score.alias("drift_score"),
-        F.coalesce(score > threshold, F.lit(True)).alias("drifted"),
+        "part", status.alias("status"), "n_old", "n_new",
+        score.alias("drift_score"), drifted.alias("drifted"),
     )

@@ -42,6 +42,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.digest import _enriched_digests
+from opengauss_tools_datachecker_performance_spark.partitions import (
+    named_partition, partition_dirs, partition_filter, partition_join, partition_order,
+)
 from opengauss_tools_datachecker_performance_spark.session import cache_scope, cached
 
 
@@ -140,40 +143,39 @@ def update_digest_companion(
     )
     t_side = touched if aqe else F.broadcast(touched)
 
-    # affected partitions: where new rows land + where touched keys
-    # currently live. The set is observed in-plan (driver-side,
-    # #partitions not #rows) while a noop sink drains the rows — no
-    # distinct shuffle — and the same pass fills the upsert cache
+    # affected partitions (where new rows land + where touched keys
+    # live), each with the directory Spark names it after, observed
+    # in-plan (driver-side, #partitions not #rows) while a noop sink
+    # drains the rows — no distinct shuffle; the pass fills the upsert cache
     hit = comp.join(t_side, "key", "left_semi").select("part")
     if new is not None:
         hit = new.select("part").unionByName(hit)
     seen = Observation()
-    hit.observe(seen, F.collect_set("part").alias("parts")).write.format(
+    hit.observe(seen, F.collect_set(named_partition()).alias("parts")).write.format(
         "noop"
     ).mode("overwrite").save()
-    parts = set(seen.get["parts"])
-    if not parts:
+    dirs = partition_dirs(spark, seen.get["parts"])
+    if not dirs:
         return []
 
-    cur = comp.filter(F.col("part").isin(list(parts)))
-    keep = cur.join(t_side, "key", "left_anti")
+    keep = partition_filter(comp, dirs).join(t_side, "key", "left_anti")
     out = keep if new is None else keep.unionByName(new.select(*keep.columns))
-    _overwrite_partitions(spark, out, path, parts)
-    return sorted(parts)
+    _overwrite_partitions(spark, out, path, set(dirs.values()))
+    return sorted(dirs, key=partition_order)
 
 
 def _overwrite_partitions(
-    spark: SparkSession, frame: DataFrame, path: str, expected_parts: set
+    spark: SparkSession, frame: DataFrame, path: str, dirs: set
 ) -> None:
-    """Rewrite exactly ``expected_parts``' part= dirs with ``frame``'s
-    rows, one file per dir.
+    """Rewrite exactly the part= ``dirs`` (directory names, from
+    partitions.partition_dirs) with ``frame``'s rows, one file per dir.
 
     The rows go to a staging dir inside ``path`` first: its ``_`` name
     hides it from readers of ``path``, and it keeps the write off the
     files ``frame`` reads (Spark refuses to overwrite a path it is
-    reading). Then each expected dir is swapped for its staged copy.
-    An expected partition the frame emptied has no staged dir, so its
-    old dir is only removed — stale rows must not survive. The swap
+    reading). Then each of ``dirs`` is swapped for its staged copy.
+    A partition the frame emptied has no staged dir, so its old dir is
+    only removed — stale rows must not survive. The swap
     goes through the Hadoop FileSystem API so hdfs:///s3a:// companion
     paths work too; a local-only shutil call would silently leave the
     stale part= dir on remote storage and the next diff would report
@@ -189,8 +191,7 @@ def _overwrite_partitions(
             staging.toString()
         )
         staged = {st.getPath().getName() for st in fs.listStatus(staging)}
-        for p in expected_parts:
-            name = f"part={p}"
+        for name in dirs:
             dst = hpath(path, name)
             if fs.exists(dst) and not fs.delete(dst, True):
                 raise IOError(f"failed to delete {dst.toString()}")
@@ -323,11 +324,11 @@ def companion_stale_partitions(
 
     comp = partition_stats(companion)  # enriched fast path: stored v_hash
     ref = reference_stats.select(
-        F.col("part").cast("int"),
+        "part",
         F.col("n_rows").cast("long").alias("ref_n_rows"),
         F.col("digest").cast("long").alias("ref_digest"),
     )
-    j = comp.join(ref, "part", "full_outer")
+    j = partition_join(comp, ref)
     reason = (
         F.when(F.col("n_rows").isNull(), F.lit("missing_in_companion"))
         .when(F.col("ref_n_rows").isNull(), F.lit("missing_in_reference"))
@@ -357,15 +358,18 @@ def repair_companion(
     """Remediation for :func:`companion_stale_partitions` hits:
     re-derive the named partitions from the doc table (the only time
     bodies are read — and only the stale partitions' bodies).
-    Partitions with no doc rows anymore have their dirs removed.
+    Partitions with no doc rows anymore have their dirs removed (the
+    update upserts their docs and deletes their companion keys).
     Returns the repaired partition values."""
     if not parts:
         return []
-    docs = docs_source.withColumnRenamed(partition_col, "part").filter(
-        F.col("part").isin(list(parts))
+    update_digest_companion(
+        spark,
+        path,
+        upserts=partition_filter(docs_source.withColumnRenamed(partition_col, "part"), parts),
+        delete_keys=partition_filter(spark.read.parquet(path), parts).select("key"),
     )
-    _overwrite_partitions(spark, digest_companion_frame(docs), path, set(parts))
-    return sorted(parts)
+    return sorted(parts, key=partition_order)
 
 
 def read_digest_companion(

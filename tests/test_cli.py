@@ -627,8 +627,9 @@ def test_cli_table_audit_wave19(spark, tmp_path):
 
 def test_cli_resume_nothing_pending_runs_near_dup(spark, tmp_path):
     """A resumed run with nothing left to validate still runs every
-    requested optional stage — near-dup included — and refreshes the
-    summary with its coverage counts."""
+    requested optional stage — near-dup included — refreshes the
+    summary with its coverage counts, and exits with the refreshed
+    summary's result (the corpus seeds violations)."""
     corpus = _setup(spark, tmp_path)
     docs_tbl = str(tmp_path / "nd_docs.parquet")
     shared = "alpha beta gamma delta epsilon zeta eta theta " * 4
@@ -645,7 +646,7 @@ def test_cli_resume_nothing_pending_runs_near_dup(spark, tmp_path):
     ]
     main(args, spark=spark)
     rc = main(args + ["--resume", "--near-dup-table", docs_tbl], spark=spark)
-    assert rc == 0
+    assert rc == 1
     pairs = spark.read.parquet(os.path.join(report, "near_dup_pairs.parquet"))
     assert pairs.count() == 1
     assert "coverage_bounds" in json.load(
