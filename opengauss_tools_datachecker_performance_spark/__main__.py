@@ -176,8 +176,13 @@ _DRIFT_CHUNK = 999_999_999
 def _has_chunk_subdirs(report_dir: str) -> bool:
     """True if a previous (chunked) run left chunk= subdirs in this
     report dir — the resumed run must keep appending to that layout."""
-    base = glob.escape(report_dir)
-    return any(glob.glob(os.path.join(base, f, "chunk=*")) for f in ("violations.parquet", "verdicts.parquet"))
+    for frame in ("violations.parquet", "verdicts.parquet"):
+        base = os.path.join(report_dir, frame)
+        if os.path.isdir(base) and any(
+            e.startswith("chunk=") for e in os.listdir(base)
+        ):
+            return True
+    return False
 
 
 def _finalize_drift(spark: SparkSession, report_dir: str, threshold: float) -> None:
@@ -404,14 +409,22 @@ def _ledger_reference_stats(spark: SparkSession, checkpoint_dir: str):
     Body-free — the ledger recorded these stats when the partition
     last validated. Only entries of the current fold version count: a
     partition whose entries predate it reads as unaudited, not stale."""
+    from pyspark.sql import Window
+
     from opengauss_tools_datachecker_performance_spark.digest import FOLD_VERSION
-    from opengauss_tools_datachecker_performance_spark.plans.lineage import read_ledger
+    from opengauss_tools_datachecker_performance_spark.plans.lineage import (
+        read_ledger,
+    )
 
     led = read_ledger(spark, checkpoint_dir).filter(
         (F.col("status") == "done") & (F.col("fold") == FOLD_VERSION)
     )
-    latest = F.max_by(F.struct("n_rows", "digest"), "wall_ts").alias("s")
-    return led.groupBy("part").agg(latest).select("part", "s.*")
+    w = Window.partitionBy("part").orderBy(F.col("wall_ts").desc())
+    return (
+        led.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("part", "n_rows", "digest")
+    )
 
 
 def _check_args(parser: argparse.ArgumentParser, args) -> None:
@@ -471,6 +484,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
 def _run(spark: SparkSession, args) -> int:
     from opengauss_tools_datachecker_performance_spark.partitions import (
+        chunk_id,
+        named_partition,
+        partition_dirs,
         partition_join,
         partition_order,
     )
@@ -666,9 +682,10 @@ def _run(spark: SparkSession, args) -> int:
             parts_df = parts_df.unionByName(
                 docs_sink.select(F.col(sink_part_col).alias("part"))
             )
-        universe = sorted(
-            (r[0] for r in parts_df.distinct().collect()), key=partition_order
+        dirs = partition_dirs(
+            spark, [r[0] for r in parts_df.select(named_partition()).distinct().collect()]
         )
+        universe = sorted(dirs, key=partition_order)
         pending = universe
     if args.resume and args.checkpoint_dir:
         pending = pending_partitions(spark, args.checkpoint_dir, universe)
@@ -712,16 +729,13 @@ def _run(spark: SparkSession, args) -> int:
         if chunked and n > 0
         else [pending]
     )
-    # chunk=<id>: the universe position of the wave's first partition, an
-    # int for any partition type and the same when a resume redoes the wave
-    position = {p: i for i, p in enumerate(universe or [])}
     schema_ok, schema_msg = True, ""
     held_digests = None  # a single full wave's digest frame, for the sections
     progress = ProgressTracker(args.report_dir, run_id)
     for ch in chunks:
         # fast path: a full single wave needs no partition filter
         only = ch if chunked or ch != universe else None
-        chunk = position[ch[0]] if chunked else None
+        chunk = chunk_id(ch[0], dirs[ch[0]]) if chunked else None
         # a single full wave's frames live in the run's scope: its
         # cached digest frame covers the whole source, so the sections
         # take it (a snapshot delta then never digests the source a
@@ -771,8 +785,7 @@ def _run(spark: SparkSession, args) -> int:
             len(result.extras["partitions"]), sum(r[1] for r in stats)
         )
         if args.checkpoint_dir:
-            part_type = result.extras["digests_source"].schema["part"].dataType
-            record_partitions(spark, args.checkpoint_dir, run_id, stats, part_type)
+            record_partitions(spark, args.checkpoint_dir, run_id, stats)
         if only is None:
             held_digests = result.extras.get("digests_source")
 

@@ -447,6 +447,7 @@ def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parquet checkpoint ledger, then compute the resume set by
     anti-joining completed partitions (plans.lineage). The oracle
     states the invariant: recorded parts report done, rest pending."""
+    from opengauss_tools_datachecker_performance_spark.partitions import partition_order
     from opengauss_tools_datachecker_performance_spark.plans.lineage import (
         partition_stats,
         pending_partitions,
@@ -464,8 +465,12 @@ def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     record_partitions(spark, ckpt, "run-1", stats.filter(F.col("part") < 4))
     all_parts = [r["part"] for r in docs.select("part").distinct().collect()]
     pending = pending_partitions(spark, ckpt, all_parts)
-    rows = [(p, "pending" if p in set(pending) else "done") for p in sorted(all_parts)]
-    return spark.createDataFrame(rows, "part int, status string")
+    rows = [
+        (p, "pending" if p in set(pending) else "done")
+        for p in sorted(all_parts, key=partition_order)
+    ]
+    part_type = docs.schema["part"].dataType.simpleString()
+    return spark.createDataFrame(rows, f"part {part_type}, status string")
 
 
 # ---------------------------------------------------------------------------

@@ -167,7 +167,7 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     subexpression elimination, so an inline ``toks`` expression would
     be re-evaluated for EVERY shingle element — measured 17 s vs <1 s
     for 5k short docs. The same discipline applies to every array this
-    module's lambdas reference (see shingle_rows)."""
+    module's lambdas reference (see shingle_pipeline)."""
     n = F.size(toks)
     return F.when(
         n >= k,
@@ -185,9 +185,34 @@ def word_shingles(text: Column, k: int = 3) -> Column:
 
     NOTE: inlines the tokenization into the shingle lambda — fine for
     one-off expressions, quadratic in the hot path (see
-    word_shingles_from_tokens). Operators should use shingle_rows.
+    word_shingles_from_tokens). Operators should use shingle_pipeline.
     """
     return word_shingles_from_tokens(ws_tokens(normalized_text(text)), k)
+
+
+def shingle_pipeline(
+    df, id_col: str, text_col: str, k: int = 3, distinct: bool = True
+):
+    """(id, text) frame → (doc_id, sh) with ``sh`` the shingle-hash
+    array, built as SEPARATE projection steps (tokens → shingles →
+    hashes) so every higher-order lambda reads a materialized attribute
+    — Catalyst's CollapseProject keeps the boundaries because each
+    alias is referenced more than once downstream."""
+    from opengauss_tools_datachecker_performance_spark.functions.hashing import (
+        portable_hash64,
+    )
+
+    toks = df.select(
+        F.col(id_col).cast("string").alias("doc_id"),
+        ws_tokens(normalized_text(F.col(text_col))).alias("_toks"),
+    )
+    shingles = toks.select(
+        "doc_id", word_shingles_from_tokens(F.col("_toks"), k).alias("_shingles")
+    )
+    h = F.transform(F.col("_shingles"), lambda s: portable_hash64(s))
+    return shingles.select(
+        "doc_id", (F.array_distinct(h) if distinct else h).alias("sh")
+    )
 
 
 def shingle_rows(
@@ -293,7 +318,7 @@ def minhash_affine(h: Column, a: int, b: int) -> Column:
 
 def minhash_signature_from_hashes(sh: Column, num_hashes: int = 8) -> Column:
     """MinHash signature off a MATERIALIZED shingle-hash array
-    array<bigint> of length num_hashes; empty
+    (shingle_pipeline): array<bigint> of length num_hashes; empty
     shingle sets yield nulls (callers treat whole-doc fallback shingles
     upstream so sh is never empty in practice). The hot path computes
     the same signature as 8 MIN aggregates over shingle_rows instead
@@ -313,9 +338,9 @@ def minhash_signature_from_hashes(sh: Column, num_hashes: int = 8) -> Column:
 
 def minhash_signature(text: Column, k: int = 3, num_hashes: int = 8) -> Column:
     """MinHash signature straight off a text column. One-off/test use —
-    the hot path works off materialized shingle hashes (shingle_rows)
-    to avoid per-element re-evaluation of the tokenization inside
-    interpreted lambdas."""
+    the hot path materializes shingle hashes first (shingle_pipeline +
+    minhash_signature_from_hashes) to avoid per-element re-evaluation
+    of the tokenization inside interpreted lambdas."""
     return minhash_signature_from_hashes(
         F.transform(word_shingles(text, k), lambda s: portable_hash64(s)),
         num_hashes,

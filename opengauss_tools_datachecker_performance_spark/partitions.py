@@ -8,6 +8,8 @@ NULL is one more partition. Every decision about such a value is here.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +52,18 @@ def partition_dirs(spark: SparkSession, named, col: str = "part") -> dict:
     path-safe; NULL is ``__HIVE_DEFAULT_PARTITION__``)."""
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     return {r["value"]: utils.getPartitionPathString(col, r["text"]) for r in named}
+
+
+def chunk_id(value, dir_name: str) -> int:
+    """The ``chunk=<id>`` of a wave whose first partition is ``value``,
+    named ``dir_name`` by :func:`partition_dirs`. An int is its own id;
+    any other value, NULL included, takes 63 bits of the SHA-1 of its
+    directory name. Derived from the value alone, so a resume over a
+    universe that has gained or lost partitions since never writes a
+    wave over a finished one."""
+    if isinstance(value, int) and not isinstance(value, bool):
+        return value
+    return int.from_bytes(hashlib.sha1(dir_name.encode()).digest()[:8], "big") >> 1
 
 
 def json_value(v):

@@ -40,7 +40,10 @@ from opengauss_tools_datachecker_performance_spark.partitions import partition_o
 
 
 def _ledger_schema(part_type: T.DataType) -> str:
-    return f"run_id string, part {part_type.simpleString()}, n_rows long, digest long, status string, wall_ts double, fold int"
+    return (
+        f"run_id string, part {part_type.simpleString()}, n_rows long, "
+        "digest long, status string, wall_ts double, fold int"
+    )
 
 
 def ledger_path(checkpoint_dir: str) -> str:
@@ -64,8 +67,14 @@ def read_ledger(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
 
 
 def completed_partitions(spark: SparkSession, checkpoint_dir: str) -> set:
-    done = read_ledger(spark, checkpoint_dir).filter(F.col("status") == "done")
-    return {r["part"] for r in done.select("part").distinct().collect()}
+    rows = (
+        read_ledger(spark, checkpoint_dir)
+        .filter(F.col("status") == "done")
+        .select("part")
+        .distinct()
+        .collect()
+    )
+    return {r["part"] for r in rows}
 
 
 def pending_partitions(
@@ -89,20 +98,33 @@ def arrow_frame(spark: SparkSession, schema: T.StructType, rows: list) -> DataFr
     return spark.createDataFrame(table, schema=schema)
 
 
+class PartitionStats(list):
+    """(part, n_rows, digest) rows collected on the driver, with
+    ``part_type``, the type of their frame's ``part``."""
+
+    def __init__(self, rows, part_type: T.DataType):
+        super().__init__(rows)
+        self.part_type = part_type
+
+
 def record_partitions(
     spark: SparkSession,
     checkpoint_dir: str,
     run_id: str,
-    partition_stats: DataFrame | list[tuple],
-    part_type: T.DataType | None = None,
+    partition_stats: DataFrame | PartitionStats,
 ) -> None:
-    """Append (part, n_rows, digest) stats as 'done' ledger rows.
-    ``partition_stats``: a frame with columns part, n_rows, digest, or
-    those rows already on the driver (validate_docs' barrier collects
-    them as extras["partition_stats"]) with ``part_type``, the type of
-    the digest frame's ``part``. The ledger keeps that type."""
+    """Append (part, n_rows, digest) stats as 'done' ledger rows, ``part``
+    with the type of the stats' ``part``. ``partition_stats``: a frame
+    with columns part, n_rows, digest, or those rows already on the
+    driver (validate_docs' barrier collects them as
+    extras["partition_stats"])."""
     if not isinstance(partition_stats, DataFrame):
-        schema = f"part {part_type.simpleString()}, n_rows long, digest long"
+        if not isinstance(partition_stats, PartitionStats):
+            raise TypeError(
+                "driver-held ledger rows must be a PartitionStats, "
+                "which carries their part type"
+            )
+        schema = f"part {partition_stats.part_type.simpleString()}, n_rows long, digest long"
         partition_stats = arrow_frame(spark, T.StructType.fromDDL(schema), partition_stats)
     now = time.time()
     out = partition_stats.select(

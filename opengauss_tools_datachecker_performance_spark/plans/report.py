@@ -12,8 +12,8 @@ by key (the reference keeps sorted TreeSets,
 CheckDiffResult.initEmptyCollections:132-136).
 
 Chunked runs (``__main__ --chunk-partitions``) write each wave into a
-``chunk=<id>`` subdirectory (``<id>``: the position of the wave's first
-partition in the run's partition order, whatever the partition type) —
+``chunk=<id>`` subdirectory (``<id>``: partitions.chunk_id of the
+wave's first partition, an int derived from that value alone) —
 re-running a wave OVERWRITES its own subdir, so a killed-and-resumed
 run never double-counts (idempotent retry, same property Spark task
 retries rely on); the final summary reads the whole directory tree

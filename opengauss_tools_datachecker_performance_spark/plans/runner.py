@@ -50,8 +50,12 @@ from opengauss_tools_datachecker_performance_spark.digest import (
 from opengauss_tools_datachecker_performance_spark.operators.diff import (
     diff_digests,
 )
-from opengauss_tools_datachecker_performance_spark.partitions import partition_filter, partition_order
+from opengauss_tools_datachecker_performance_spark.partitions import (
+    partition_filter,
+    partition_order,
+)
 from opengauss_tools_datachecker_performance_spark.plans.lineage import (
+    PartitionStats,
     arrow_frame,
     partition_stats,
 )
@@ -70,14 +74,18 @@ class ValidationResult:
 
 
 def _empty_violations(spark: SparkSession, part_type: T.DataType) -> DataFrame:
-    schema = f"part {part_type.simpleString()}, constraint string, key string, span_idx int, detail string"
+    schema = (
+        f"part {part_type.simpleString()}, constraint string, key string, "
+        "span_idx int, detail string"
+    )
     return spark.createDataFrame([], schema)
 
 
-def _partition_stats(dig: DataFrame) -> list[tuple]:
+def _partition_stats(dig: DataFrame) -> PartitionStats:
     """(part, n_rows, digest) per partition of a digest frame, collected
     (the lineage digest folds the frame's stored hashes)."""
-    return [tuple(r) for r in partition_stats(dig).collect()]
+    rows = [tuple(r) for r in partition_stats(dig).collect()]
+    return PartitionStats(rows, dig.schema["part"].dataType)
 
 
 def drift_verdicts(drift: DataFrame) -> DataFrame:

@@ -740,8 +740,15 @@ def _run_snapshot_delta(spark, args, ctx) -> dict:
         snapshot_drift(old, new, threshold=args.drift_threshold).write.mode(
             "overwrite"
         ).parquet(drift_path)
-        rows = spark.read.parquet(drift_path).filter(F.col("drifted")).collect()
-        drifted = sorted((r["part"] for r in rows), key=partition_order)
+        drifted = sorted(
+            (
+                r["part"]
+                for r in spark.read.parquet(drift_path)
+                .filter(F.col("drifted"))
+                .collect()
+            ),
+            key=partition_order,
+        )
         print(f"[snapshot] drifted partitions vs old snapshot: {drifted}")
         section["drifted_partitions"] = drifted
     else:

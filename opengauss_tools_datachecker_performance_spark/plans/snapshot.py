@@ -73,18 +73,32 @@ def snapshot_bucket_delta(
             F.lit("changed"),
         )
     )
-    delta = j.select("part", "bucket", status.alias("status"), "n_old", "n_new").filter(
-        F.col("status").isNotNull()
+    delta = (
+        j.select(
+            "part",
+            "bucket",
+            status.alias("status"),
+            F.col("n_old").alias("n_old"),
+            F.col("n_new").alias("n_new"),
+        )
+        .filter(F.col("status").isNotNull())
     )
     rollup = delta.groupBy("part").agg(
-        *(
-            F.sum((F.col("status") == s).cast("long")).alias(f"n_buckets_{s}")
-            for s in ("changed", "new", "gone")
-        ),
-        *(
-            F.sum(F.coalesce(F.col(f"n_{s}"), F.lit(0))).cast("long").alias(f"delta_rows_{s}")
-            for s in ("old", "new")
-        ),
+        F.sum((F.col("status") == "changed").cast("long"))
+        .cast("long")
+        .alias("n_buckets_changed"),
+        F.sum((F.col("status") == "new").cast("long"))
+        .cast("long")
+        .alias("n_buckets_new"),
+        F.sum((F.col("status") == "gone").cast("long"))
+        .cast("long")
+        .alias("n_buckets_gone"),
+        F.sum(F.coalesce(F.col("n_old"), F.lit(0)))
+        .cast("long")
+        .alias("delta_rows_old"),
+        F.sum(F.coalesce(F.col("n_new"), F.lit(0)))
+        .cast("long")
+        .alias("delta_rows_new"),
     )
     return delta, rollup
 
@@ -140,8 +154,11 @@ def snapshot_drift(
         .otherwise(F.lit("compared"))
     )
     score = F.when(status == "compared", gap)
-    drifted = F.coalesce(score > threshold, F.lit(True))
     return j.select(
-        "part", status.alias("status"), "n_old", "n_new",
-        score.alias("drift_score"), drifted.alias("drifted"),
+        "part",
+        status.alias("status"),
+        F.col("n_old"),
+        F.col("n_new"),
+        score.alias("drift_score"),
+        F.coalesce(score > threshold, F.lit(True)).alias("drifted"),
     )

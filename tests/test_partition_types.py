@@ -98,22 +98,23 @@ def _drop_last_wave(report: str, ckpt: str) -> None:
     ledger = ledger_path(ckpt)
     table = pq.read_table(ledger)
     last = pc.max(table["wall_ts"])
+    undone = set(table.filter(pc.equal(table["wall_ts"], last))["part"].to_pylist())
     kept = table.filter(pc.less(table["wall_ts"], last))
     shutil.rmtree(ledger)
     os.makedirs(ledger)
     pq.write_table(kept, os.path.join(ledger, "part-0.parquet"))
-    last_chunk = max(
-        int(e.split("=")[1])
-        for e in os.listdir(os.path.join(report, "violations.parquet"))
-        if e.startswith("chunk=")
-    )
-    for frame, chunk in (
-        ("violations.parquet", last_chunk),
-        ("verdicts.parquet", last_chunk),
-        ("verdicts.parquet", _DRIFT_CHUNK),
-        ("drift_profiles.parquet", last_chunk),
-    ):
-        shutil.rmtree(os.path.join(report, frame, f"chunk={chunk}"))
+    # chunk ids are not ordered like waves: find the wave's by its parts
+    verdicts = os.path.join(report, "verdicts.parquet")
+    drift = f"chunk={_DRIFT_CHUNK}"
+    (chunk,) = [
+        e
+        for e in os.listdir(verdicts)
+        if e.startswith("chunk=") and e != drift
+        and set(pq.read_table(os.path.join(verdicts, e))["part"].to_pylist()) & undone
+    ]
+    for frame in ("violations.parquet", "verdicts.parquet", "drift_profiles.parquet"):
+        shutil.rmtree(os.path.join(report, frame, chunk))
+    shutil.rmtree(os.path.join(verdicts, drift))
     os.remove(os.path.join(report, "summary.json"))
 
 
@@ -155,6 +156,31 @@ def test_partition_type_matrix(spark, corpora, int_grid, tmp_path, labeling, mod
         assert ledger.schema["part"].dataType == table_part.dataType
         done = {r["part"] for r in ledger.collect()}
         assert done == set(LABELS[labeling].values())
+
+
+@pytest.mark.parametrize("labeling", ["int", "string_null"])
+def test_chunked_resume_after_finished_partitions_dropped(
+    spark, corpora, int_grid, tmp_path, labeling
+):
+    """The finished wave's partitions, which sort before the pending
+    ones, are dropped between a killed chunked run and its resume: the
+    pending wave's chunk id depends on its own first value, so it does
+    not overwrite the finished wave's dir."""
+    d = corpora[labeling]
+    report, ckpt = str(tmp_path / "report"), str(tmp_path / "ckpt")
+    chunked = ["--chunk-partitions", "2", "--checkpoint-dir", ckpt]
+    assert main(_args(d, report) + chunked, spark=spark) == 1
+    _drop_last_wave(report, ckpt)
+    dropped = sorted(v for v in LABELS[labeling].values() if v is not None)[:2]
+    fewer = f"{d}_finished_dropped"  # beside the corpora, for the int assets
+    for side in ("docs_source", "docs_sink"):
+        spark.read.parquet(f"{d}/{side}.parquet").filter(
+            F.col("part").isNull() | ~F.col("part").isin(dropped)
+        ).write.partitionBy("part").parquet(f"{fewer}/{side}.parquet")
+    assert main(_args(fewer, report) + chunked + ["--resume"], spark=spark) == 1
+    # both waves' verdicts, the dropped partitions' first-run ones too
+    assert _grid(spark, report, LABELS[labeling]) == int_grid
+    assert spark.read.parquet(f"{report}/verdicts.parquet").count() == len(int_grid)
 
 
 def test_resume_refuses_ledger_of_another_part_type(spark, corpora, tmp_path, capsys):
